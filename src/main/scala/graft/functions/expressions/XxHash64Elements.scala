@@ -41,8 +41,11 @@ case class XxHash64Elements(child: Expression) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, arr => {
+      // through the module instance, not the companion's static
+      // forwarder, which Scala omits if the case class ever gains a
+      // member of the same name
       s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.expressions.XxHash64Elements.hashes($arr));
+         |  graft.functions.expressions.XxHash64Elements$$.MODULE$$.hashes($arr));
        """.stripMargin
     })
 
@@ -56,7 +59,7 @@ object XxHash64Elements {
   /** Spark's `xxhash64` default seed. */
   val Seed = 42L
 
-  /** Static so generated code can call it. */
+  /** The kernel; generated code calls it through `MODULE$`. */
   def hashes(arr: ArrayData): Array[Long] = {
     val n = arr.numElements()
     val out = new Array[Long](n)

@@ -3,6 +3,8 @@ package graft.io
 import java.nio.file.Path
 import java.util.Properties
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects, JdbcType}
+import org.apache.spark.sql.types.{DataType, StringType}
 import graft.config.ImportConfig
 import graft.functions.RefFunctions.bracketQuoteName
 
@@ -29,6 +31,31 @@ object JdbcTableSink {
     "truncate" -> "true",
     "batchsize" -> batchSize.toString,
     "isolationLevel" -> "READ_COMMITTED")
+
+  /** Registered once, before the first write. */
+  private[io] lazy val dialectsRegistered: Unit =
+    JdbcDialects.registerDialect(DerbyNullStringDialect)
+}
+
+/** Derby string binding for the JDBC writer. Spark's Derby dialect maps a
+  * string column to `CLOB` for both the DDL and the null bind, so a
+  * truncate-load into an existing VARCHAR table (the predefined tables a
+  * real target has) fails on the first null string: Derby will not read
+  * a CLOB null as VARCHAR. This dialect keeps `CLOB` as the DDL type and
+  * binds null strings as `VARCHAR`, which Derby accepts for both column
+  * types. Spark combines it with its own Derby dialect (this one answers
+  * first for strings and defers every other type to it); it states
+  * Derby's non-cascading truncate so the combination keeps `truncate`.
+  */
+private[io] object DerbyNullStringDialect extends JdbcDialect {
+  override def canHandle(url: String): Boolean = url.startsWith("jdbc:derby")
+
+  override def getJDBCType(dt: DataType): Option[JdbcType] = dt match {
+    case StringType => Some(JdbcType("CLOB", java.sql.Types.VARCHAR))
+    case _ => None
+  }
+
+  override def isCascadingTruncateTable(): Option[Boolean] = Some(false)
 }
 
 /** `urlOverride` + `quoteName=false` let tests run the SAME write path
@@ -38,6 +65,7 @@ object JdbcTableSink {
 final class JdbcTableSink(cfg: ImportConfig, urlOverride: Option[String] = None,
     quoteName: Boolean = true) extends TableSink {
   override def write(df: DataFrame, table: String): Unit = {
+    JdbcTableSink.dialectsRegistered
     val props = new Properties()
     val opts = JdbcTableSink.writerOptions(cfg)
     df.write.mode("overwrite")

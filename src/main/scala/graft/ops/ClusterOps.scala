@@ -77,14 +77,9 @@ object ClusterOps {
   private def ccLevel(sym: DataFrame, level: Int, maxRounds: Int): DataFrame = {
     require(level <= maxRounds,
       s"connected components did not converge in $maxRounds levels")
-    // hook: every node points to the min of its closed neighborhood — the
-    // only full-edge-list aggregation of the level. sym is symmetric, so
-    // grouping by src covers every node.
     // hook is NOT checkpointed: compress round 1 self-joins it, and both
     // sides share the groupBy exchange (reuse), so it computes once anyway
-    val hook = sym.groupBy(col("src").as("id")).agg(min(col("dst")).as("nmin"))
-      .select(col("id"), least(col("id"), col("nmin")).as("rep"))
-    val roots = compress(hook, maxRounds)
+    val roots = compress(hook(sym), maxRounds)
     if (log.isDebugEnabled)
       log.debug(s"[cc] level $level compressed t=${System.nanoTime() / 1e9}")
     // contract: rewrite each edge to its endpoints' root labels; edges
@@ -116,12 +111,29 @@ object ClusterOps {
     }
   }
 
+  /** Hook: every node points to the min of its closed neighborhood — the
+    * only full-edge-list aggregation of a level. `sym` is symmetric, so
+    * grouping by src covers every node. The labels satisfy rep ≤ id, the
+    * precondition of [[compress]] (ClusterOpsSpec pins it).
+    */
+  private[graft] def hook(sym: DataFrame): DataFrame =
+    sym.groupBy(col("src").as("id")).agg(min(col("dst")).as("nmin"))
+      .select(col("id"), least(col("id"), col("nmin")).as("rep"))
+
   /** Pointer-double `rep ← rep(rep)` to fixpoint: label depth halves per
     * round, so rounds stay O(log depth). Operates on the node-sized label
     * table only. Every rep value is itself a node id with a label row, but
     * the lookup is left+coalesce for safety.
+    *
+    * PRECONDITION: `hook` labels satisfy rep ≤ id, so the pointer graph is
+    * a forest whose only cycles are self-loops at the roots. The fixpoint
+    * test compares a label with the label two jumps on; under rep ≤ id
+    * that can only be equal at a root, but labels with a longer cycle
+    * (a 2-cycle a → b → a) would pass it unresolved and converge to a
+    * wrong labelling with no error. [[hook]] guarantees the precondition
+    * by construction; it is not re-checked here, which would cost a job.
     */
-  private def compress(hook: DataFrame, maxRounds: Int): DataFrame = {
+  private[graft] def compress(hook: DataFrame, maxRounds: Int): DataFrame = {
     var labels = hook
     var round = 0
     var done = false

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions.col
   * (r13 — the [[SparseIndex]]/[[DedupEdges]] pattern applied to graph
   * ANN): `ann_hnsw_topk` and `mmr_rerank_ann` both search the SAME
   * deterministic bounded-degree proximity graph, and each rebuilt it per
-  * execution (LSH banding + bucket self-join + per-node top-degree
-  * window — the dominant cost of both queries). A production HNSW
+  * execution (LSH banding + the banded top-K kernel at top-degree — the
+  * dominant cost of both queries). A production HNSW
   * deployment builds the graph once per corpus snapshot and serves
   * queries against it — exactly what [[SimilarityOps.hnswAdjacencyInline]]'s
   * scaladoc promises ("production keeps it as a maintained table") and

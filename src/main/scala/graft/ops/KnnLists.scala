@@ -7,8 +7,10 @@ import org.apache.spark.sql.functions.col
   * artifact (r15 — the [[HnswIndex]]/[[SparseIndex]] pattern applied to
   * the `knn_join` artifact): `knn_join` serves the per-node top-K lists
   * and `semdedup_knn` thresholds the SAME lists into the semantic-dedup
-  * edge set, and each rebuilt the banded bucket cogroup + exact scoring +
-  * per-node top-K window per execution — the dominant cost of both. A
+  * edge set, and each would otherwise rerun the banded top-K kernel
+  * ([[SimilarityOps.bandedTopK]]: one (band, bucket) exchange of bands × n
+  * vector-carrying rows, per-bucket scoring, one node-keyed merge) per
+  * execution — the dominant cost of both. A
   * production SemDeDup deployment materializes the lists once per corpus
   * snapshot and MAINTAINS them under arrivals/deletes
   * ([[SimilarityOps.incrementalKnn]] / [[SimilarityOps.knnDeleteRepair]]

@@ -416,21 +416,22 @@ object SimilarityOps {
     * [[bandsFor]] — the gate 4×20 at gate corpus sizes, scaled buckets
     * beyond; measured query recall
     * 0.94–0.96 on this corpus): every pair cohabiting ANY band bucket is
-    * exact-cosine scored once per orientation, then each node keeps its
+    * exact-cosine scored in the buckets it shares, and each node keeps its
     * top-K by (cos DESC, neighbor). Self-join recall vs the exact
     * all-pairs baseline is measured and pinned ≥ 0.8 in DedupOpsSpec
     * (sf0.001: 0.9+).
     *
-    * Scale shape: NEVER all-pairs — candidates are the banded bucket
-    * cogroup ([[hnswCohabit]], linear in bucket occupancy; occupancy is
-    * the [[annLshOccupancy]]-audited knob), scoring is two id-keyed vector
-    * lookups per candidate, and the only corpus-wide shuffle is the
-    * per-node top-K window (bounded by per-node candidate counts). At
-    * 100 TB this is exactly the shape a full-corpus kNN materialization
-    * job runs: band-partitioned cogroup → verify → per-node TopK, every
-    * stage keyed and combinable. Nodes with no bucket cohabitant anywhere
-    * emit no rows (correct for LSH-kNN: they have no near neighbor at
-    * the banding's similarity floor). Seeded sessions serve the
+    * Scale shape: NEVER all-pairs, and no pair table — the build is the
+    * fused [[bandedTopK]] kernel: bands × n vector-carrying band rows
+    * through ONE (band, bucket) exchange, per-bucket exact scoring with a
+    * bounded per-node top-K (dot work linear in bucket occupancy;
+    * occupancy is the [[annLshOccupancy]]-audited knob), then ONE
+    * node-keyed merge of at most bands × K rows per node. At 100 TB this
+    * is the shape a full-corpus kNN materialization job runs: band-
+    * partitioned verify → per-node TopK, both stages keyed and bounded.
+    * Nodes with no bucket cohabitant anywhere emit no rows (correct for
+    * LSH-kNN: they have no near neighbor at the banding's similarity
+    * floor). Seeded sessions serve the
     * [[KnnLists]] materialization of this build (r15 — the production
     * artifact-serving shape); the inline build stays the unseeded path
     * and its honest cost stays bench-visible through
@@ -444,12 +445,10 @@ object SimilarityOps {
   def knnJoin(s: SparkSession, dir: String, bitsPerBand: Int,
       bands: Int, k: Int): DataFrame = {
     val emb = embeddings(s, dir)
-    val banded = hnswBanded(emb, bitsPerBand, bands)
-    val scored = hnswScore(hnswCohabit(banded, banded), emb)
     val w = Window.partitionBy(col("node"))
       .orderBy(col("ncos").desc, col("nbr"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    bandedTopK(hnswBanded(emb, bitsPerBand, bands), emb, k)
+      .withColumn("rank", row_number().over(w))
       .select(col("node").as("vec_id"), col("rank"),
         col("nbr").as("neighbor_id"), round(col("ncos"), 4).as("cos"))
       .orderBy("vec_id", "rank")
@@ -493,12 +492,13 @@ object SimilarityOps {
     * `delete_propagation` / `incremental_dedup_edges`
     * recompute-vs-maintain demonstration convention).
     *
-    * Scale shape: the artifact build is [[knnJoin]]'s audited bucket
-    * cogroup; damage detection is a semi-join of the n×K list table
+    * Scale shape: the artifact build is [[knnJoin]]'s banded top-K
+    * kernel; damage detection is a semi-join of the n×K list table
     * against the delete ids; repair re-probes ONLY damaged nodes' bands
-    * against surviving bands — |damaged banding| × bucket occupancy, not
-    * a second corpus pass; the lists table is localCheckpointed (n×K
-    * rows) because keep/damage/union all read it.
+    * against surviving bands (the kernel again, damaged → survivors) —
+    * |damaged banding| × bucket occupancy dots, not a second corpus
+    * pass; the lists table is localCheckpointed (n×K rows) because
+    * keep/damage/union all read it.
     */
   def knnDeleteRepair(s: SparkSession, dir: String): DataFrame = {
     val kk = K
@@ -513,12 +513,11 @@ object SimilarityOps {
     // when everything ran single-core and recomputation was 4× a serial
     // pass)
     val banded = hnswBanded(emb, bits, bandsFor(bits))
-    val scored = hnswScore(hnswCohabit(banded, banded), emb)
     val w = Window.partitionBy(col("node"))
       .orderBy(col("ncos").desc, col("nbr"))
     // the persisted artifact: every node's top-K lists (knn_join's build)
-    val lists = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kk)
+    val lists = bandedTopK(banded, emb, kk)
+      .withColumn("rank", row_number().over(w))
       .localCheckpoint() // n×K rows; keep, damage, and union all read it
     val surviving = lists.filter(!isDel(col("node")))
     val damaged = surviving.filter(isDel(col("nbr")))
@@ -530,10 +529,8 @@ object SimilarityOps {
       .join(damaged.select(col("node").as("vec_id")), Seq("vec_id"),
         "left_semi")
     val bandedSurvivors = banded.filter(!isDel(col("vec_id")))
-    val repaired = hnswScore(
-        hnswCohabit(bandedDamaged, bandedSurvivors), emb)
+    val repaired = bandedTopK(bandedDamaged, bandedSurvivors, emb, kk)
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kk)
     kept.unionByName(repaired)
       .select(col("node").as("vec_id"), col("rank"),
         col("nbr").as("neighbor_id"), round(col("ncos"), 4).as("cos"))
@@ -587,11 +584,13 @@ object SimilarityOps {
     * `incremental_dedup_edges` recompute-vs-maintain convention).
     *
     * Scale shape: both eras are narrow filters of ONE banding pass
-    * (checkpointed — base self-join ×2 + delta probes ×3 read it); the
-    * base build is [[knnJoin]]'s audited bucket cogroup over the base
-    * era; maintenance candidates are delta-banding-sized on one side —
-    * |delta banding| × bucket occupancy, never a second corpus pass;
-    * the re-rank window is bounded by K + per-node delta candidates.
+    * (checkpointed — the base build and the insert form's three reads
+    * share it); the base build is [[knnJoin]]'s banded top-K kernel over
+    * the base era; maintenance is the kernel's insert form
+    * ([[bandedInsertTopK]]): base rows semi-joined to the delta's
+    * buckets, base-base pairs never scored — |delta banding| × bucket
+    * occupancy dots, never a second corpus pass; the re-rank window is
+    * bounded by 2K rows per node.
     * With [[knnDeleteRepair]] this completes the artifact lifecycle:
     * the n×K lists table now has a build, an insert path, and a
     * delete+repair path, each proven hash-equal to the rebuild.
@@ -602,29 +601,20 @@ object SimilarityOps {
     val isIns = pmod(col("vec_id"), lit(10)) === 9
     val bits = derivedBits(s, dir)
     val banded = hnswBanded(emb, bits, bandsFor(bits))
-      .localCheckpoint() // base self-join ×2 + delta probes ×3 read it;
-                         // re-measured r18 at the parallel banding: a wash
-                         // (1.79 s with / 1.71 without) — kept so the five
-                         // consumers stay one plan-time exchange (the
-                         // knnDeleteRepair tradeoff went the other way:
-                         // 4 reads, −1.4 s from dropping it)
+      .localCheckpoint() // the base build + the insert form's base,
+                         // delta and delta-keys reads: one plan-time
+                         // banding exchange for the four (r18 measured the
+                         // checkpoint a wash at the parallel banding)
     val bandedBase = banded.filter(!isIns)
     val bandedDelta = banded.filter(isIns)
     val w = Window.partitionBy(col("node"))
       .orderBy(col("ncos").desc, col("nbr"))
     // the persisted artifact: the base era's top-K lists (knn_join's
     // build over the pre-arrival corpus; production loads it)
-    val baseLists = hnswScore(hnswCohabit(bandedBase, bandedBase), emb)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kk)
-      .select(col("node"), col("nbr"), col("ncos"))
-    // delta-involving candidates only: (delta → any) ∪ (base → delta);
-    // the orientations are disjoint by construction (a delta node never
-    // appears on the left of the second cogroup)
-    val deltaScored = hnswScore(
-      hnswCohabit(bandedDelta, banded)
-        .unionByName(hnswCohabit(bandedBase, bandedDelta)), emb)
-    baseLists.unionByName(deltaScored)
+    val baseLists = bandedTopK(bandedBase, emb, kk)
+    // delta-involving pairs only: (delta → any) ∪ (base → delta), the
+    // disjoint split, so no pair takes two top-K slots
+    baseLists.unionByName(bandedInsertTopK(bandedBase, bandedDelta, emb, kk))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= kk)
       .select(col("node").as("vec_id"), col("rank"),
@@ -650,10 +640,10 @@ object SimilarityOps {
     * costs one lists build + two aggregates — no query set, no exact
     * baseline.
     *
-    * Scale shape: the lists build is [[knnJoin]]'s audited bucket
-    * cogroup (checkpointed — the node audit and the edge audit both
-    * read it); the audits are ONE keyed distinct + two 1-row aggregates;
-    * the final row is a broadcast scalar cross.
+    * Scale shape: the lists build is [[knnJoin]]'s banded top-K kernel
+    * (checkpointed — the node audit and the edge audit both read it);
+    * the audits are ONE keyed distinct + two 1-row aggregates; the final
+    * row is a broadcast scalar cross.
     */
   def knnDamageStats(s: SparkSession, dir: String): DataFrame = {
     val kk = K
@@ -661,11 +651,7 @@ object SimilarityOps {
     val isDel = (c: org.apache.spark.sql.Column) => pmod(c, lit(10)) === 3
     val bits = derivedBits(s, dir)
     val banded = hnswBanded(emb, bits, bandsFor(bits))
-    val w = Window.partitionBy(col("node"))
-      .orderBy(col("ncos").desc, col("nbr"))
-    val lists = hnswScore(hnswCohabit(banded, banded), emb)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kk)
+    val lists = bandedTopK(banded, emb, kk)
       .select(col("node"), col("nbr"))
       .localCheckpoint() // node audit + edge audit both read it;
                          // measured sf0.1 warm: 3.58 s with / 3.99 without
@@ -1016,9 +1002,9 @@ object SimilarityOps {
     * component semantics a dedup audit wants: A~B~C all land in ONE
     * cluster even when cos(A,C) < τ.
     *
-    * Scale shape: the edge set is the knn artifact (bucket-cogrouped,
-    * never all-pairs; K-bounded per node, so |edges| ≤ K·n), and the
-    * closure is the node-sized CC machinery every dedup_clusters query
+    * Scale shape: the edge set is the knn artifact (the banded top-K
+    * kernel, never all-pairs; K-bounded per node, so |edges| ≤ K·n), and
+    * the closure is the node-sized CC machinery every dedup_clusters query
     * already runs — joins-only, O(log diameter) levels, propagation
     * behind localCheckpoints. The oracle composes the knn
     * transliteration with the recursive-CTE closure verbatim.
@@ -2127,10 +2113,10 @@ object SimilarityOps {
     *    sign-LSH bucket candidates (8-bit × 10-band — MORE selective than
     *    the 4×20 search banding, because graph build wants sparse
     *    high-precision candidate sets: 16× fewer candidate pairs on this
-    *    similarity-heavy corpus at equal plane count; candidate
-    *    generation is the already-audited bucket cogroup, never all
-    *    pairs), ties to min id. A bounded-degree proximity graph: layer-0
-    *    adjacency ≤ degree rows per node.
+    *    similarity-heavy corpus at equal plane count; selection is the
+    *    banded top-K kernel, never all pairs), ties to min id. A
+    *    bounded-degree proximity graph: layer-0 adjacency ≤ degree rows
+    *    per node.
     *  - SEARCH (r11 — VERDICT r10 #5, best-first beam replacing the fixed
     *    two-hop frontier): score the query against the (1/levelMod)-sized
     *    upper layer, keep top-`entries` entry points (the greedy
@@ -2147,12 +2133,12 @@ object SimilarityOps {
     *    while scoring ≤ beamWidth·(degree+1) nodes per query per round —
     *    score-ordered pruning buys DEPTH with less work.
     *
-    * Scale shape: neighbor build is the LSH-candidate pair join (banded,
-    * linear in bucket occupancy) + one per-node window; at 100 TB the
-    * adjacency is a materialized table (GraphEdges-style) maintained
-    * incrementally, and search touches per round only
-    * queries×beamWidth×degree adjacency rows + the same number of
-    * id-keyed vector lookups — no corpus-sized shuffle at query time.
+    * Scale shape: neighbor build is the banded top-K kernel (one
+    * (band, bucket) exchange, dot work linear in bucket occupancy) + one
+    * node-keyed merge; at 100 TB the adjacency is a materialized table
+    * (GraphEdges-style) maintained incrementally, and search touches per
+    * round only queries×beamWidth×degree adjacency rows + the same number
+    * of id-keyed vector lookups — no corpus-sized shuffle at query time.
     * Each round's beam is `localCheckpoint`ed (≤ NQueries·beamWidth ids —
     * the kmeansIterate lineage discipline; the beam feeds both the next
     * frontier and the next candidate union). Deeper corpora add layers
@@ -2194,10 +2180,10 @@ object SimilarityOps {
   }
 
   /** The HNSW layer-0 adjacency, built inline: bounded-degree neighbor
-    * lists from LSH bucket candidates (directed: the self-join emits both
-    * orientations of every cohabiting pair), per-node top-`degree` OUT
-    * selection, then SYMMETRIZED (HNSW links are bidirectional): without
-    * the reverse edges a hub's top-degree list drops its spokes while
+    * lists from LSH bucket candidates (directed: every node ranks its
+    * bucket cohabitants), per-node top-`degree` OUT selection
+    * ([[bandedTopK]]), then SYMMETRIZED (HNSW links are bidirectional):
+    * without the reverse edges a hub's top-degree list drops its spokes while
     * every spoke keeps the hub — best-first search could descend INTO
     * dense regions but never back out, and measured sf0.1 recall
     * collapsed to 0.46–0.66 vs 0.96 with the union. Effective degree
@@ -2219,8 +2205,8 @@ object SimilarityOps {
   }
 
   /** `(vec_id, band, bucket)` sign-LSH banding of an embedding frame —
-    * the candidate-generation key of the HNSW build and its incremental
-    * maintenance.
+    * the candidate-generation key of [[bandedTopK]] (every kNN/HNSW build
+    * and its incremental maintenance) and of the occupancy audits.
     */
   private[graft] def hnswBanded(emb: DataFrame, bitsPerBand: Int,
       bands: Int): DataFrame =
@@ -2229,75 +2215,179 @@ object SimilarityOps {
       .select(col("vec_id"), col("pos").as("band"), col("col").as("bucket"))
       // spread the banding across the session's shuffle parallelism (r18
       // JobProbe, guide §2.5 input skew): the embeddings corpus arrives as
-      // few parquet files, so without this every bucket-cogroup map stage
-      // downstream — the O(occupancy²) pair generation, the family's
-      // dominant cost — inherits ONE input partition and runs on one core
-      // (measured single-task stages of 1.9-2.0 s wall under local[32]).
-      // The exchange itself is ids-only rows (vec_id, band, bucket) — the
-      // vectors never ride it — and the key is the cogroup's own join key,
-      // scale-adaptive via spark.sql.shuffle.partitions. The partition
-      // count is EXPLICIT because AQE's coalescer models cost by shuffle
-      // BYTES: banding rows are ~24 bytes but each fans out to
-      // occupancy² pair work downstream, so byte-based coalescing folds
-      // the whole cogroup back onto one core (observed: repartition
+      // few parquet files, so without this the per-bucket scoring of
+      // [[bandedTopK]] — the family's dominant cost — inherits ONE input
+      // partition and runs on one core (measured single-task stages of
+      // 1.9-2.0 s wall under local[32]). The exchange carries ids-only rows
+      // (vec_id, band, bucket) and its key is the kernel's own bucket key,
+      // so the kernel's vector attach (a broadcast at gate corpus sizes)
+      // keeps this partitioning and its own (band, bucket) exchange plans
+      // away. The partition count is EXPLICIT because AQE's coalescer
+      // models cost by shuffle BYTES: banding rows are ~24 bytes but each
+      // fans out to occupancy² dots downstream, so byte-based coalescing
+      // folds every bucket back onto one core (observed: repartition
       // without a count → AQE → 1 partition → the same 2 s single-task
       // stage the repartition was added to break).
-      .repartition(emb.sparkSession.sessionState.conf.numShufflePartitions,
+      .repartition(bucketPartitions(emb.sparkSession),
         col("band"), col("bucket"))
 
-  /** Distinct directed cohabiting pairs `(node, nbr)` between two banded
-    * frames: node from `a`, nbr from `b`, same (band, bucket), self
-    * excluded — the bucket cogroup that keeps every HNSW build linear in
-    * bucket occupancy, never all-pairs.
-    */
-  private[graft] def hnswCohabit(a: DataFrame, b: DataFrame): DataFrame =
-    a.as("a").join(b.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("node"), col("b.vec_id").as("nbr"))
-      // distinct()-equivalent with ONE exchange instead of two (r18 —
-      // guide §2.4): .distinct() shuffles the raw cohabit rows on
-      // (node, nbr) and every consumer then re-shuffles on node for its
-      // per-node top-K window. collect_set keyed by node dedups map-side
-      // (partial aggregation — a pair cohabiting in k bands sheds its
-      // k−1 copies before the exchange), ships each node's neighbor set
-      // once, and leaves the output hashpartitioned by node — the window
-      // downstream needs only a sort. Set sizes are bucket-occupancy-
-      // bounded (the banding invariant), never corpus-sized.
-      .groupBy(col("node")).agg(collect_set(col("nbr")).as("nbrs"))
-      .select(col("node"), explode(col("nbrs")).as("nbr"))
+  private def bucketPartitions(s: SparkSession): Int =
+    s.sessionState.conf.numShufflePartitions
 
-  /** Exact-score a distinct candidate pair set by two id-keyed vector
-    * lookups: `(node, nbr, ncos)` — one deterministic dot per pair, so
-    * the same pair scores bit-identically wherever it is generated (the
-    * property [[incrementalHnsw]]'s maintenance ≡ rebuild proof rides on).
+  /** A bucket member handed to [[bandedTopK]]'s per-bucket pass; `role`
+    * is a set of [[NodeRole]] / [[NbrRole]] / [[BaseRole]] bits. (Not
+    * `private`: Spark's generated code builds and reads these classes.)
     */
-  private[graft] def hnswScore(cand: DataFrame, emb: DataFrame): DataFrame =
-    cand
-      .join(emb.select(col("vec_id").as("node"), col("v").as("nv")), "node")
-      .join(emb.select(col("vec_id").as("nbr"), col("v").as("bv")), "nbr")
-      .select(col("node"), col("nbr"), dot(col("nv"), col("bv")).as("ncos"))
+  private[graft] final case class BandMember(vec_id: Long, v: Array[Double],
+      role: Int)
 
-  /** Per-node top-`degree` by (ncos DESC, nbr) over a scored candidate
-    * set — the bounded-degree OUT selection, score carried for
-    * maintenance re-ranking ([[HnswIndex.insert]]).
+  /** One kept `(node, nbr, ncos)` row of [[bandedTopK]]. */
+  private[graft] final case class ScoredPair(node: Long, nbr: Long,
+      ncos: Double)
+
+  /** The member ranks neighbors. */
+  private val NodeRole = 1
+  /** The member is ranked. */
+  private val NbrRole = 2
+  /** The member is in an insert's base era: two base members never pair. */
+  private val BaseRole = 4
+
+  /** Banded top-K, fused: for every node of `a`, its top-`k` neighbors of
+    * `b` by (ncos DESC, nbr) among the vectors sharing at least one
+    * `(band, bucket)` with it (self excluded), as `(node, nbr, ncos)`.
+    * `a` and `b` are [[hnswBanded]] frames, `emb` supplies `(vec_id, v)`.
+    * This kernel, with its self-join and insert forms below, serves every
+    * kNN/HNSW build and maintenance site.
+    *
+    * One pass, no pair table: each band row gets its vector attached,
+    * ONE exchange groups the rows by `(band, bucket)`, and inside each
+    * bucket every qualifying pair is scored with the sequential
+    * left-fold dot of [[graft.functions.expressions.DotProduct]] (so a
+    * pair's `ncos` is bit-identical wherever it is formed) while each
+    * node keeps a bounded top-`k`. A node-keyed merge then drops the
+    * pairs found in several bands and takes the final top-`k`. Exact by
+    * pigeonhole: a neighbor in a node's global top-`k` has at most k−1
+    * better candidates anywhere, so it is also in the top-`k` of every
+    * bucket the two share. BandedTopKSpec pins every form ≡ the composed
+    * cohabit → score → window reference on random corpora.
+    *
+    * Traffic: bands × (|a| + |b|) vector-carrying rows through the
+    * bucket exchange (bands × n for the self-join, which sends one copy
+    * per row), then at most bands × k scored rows per node into the
+    * merge — in place of Σ distinct candidate pairs shuffled, each with
+    * two vector attaches.
     */
-  private[graft] def hnswTopOut(scored: DataFrame, degree: Int): DataFrame = {
-    val wN = Window.partitionBy(col("node"))
+  private[graft] def bandedTopK(a: DataFrame, b: DataFrame, emb: DataFrame,
+      k: Int): DataFrame =
+    topKMerge(withRole(a, NodeRole).unionByName(withRole(b, NbrRole)), emb, k)
+
+  /** [[bandedTopK]] of a banded frame against itself. */
+  private[graft] def bandedTopK(banded: DataFrame, emb: DataFrame,
+      k: Int): DataFrame =
+    topKMerge(withRole(banded, NodeRole | NbrRole), emb, k)
+
+  /** The insert form of [[bandedTopK]]: the top-`k` of the delta-involving
+    * pairs only, (delta → base ∪ delta) ∪ (base → delta), in one pass —
+    * base-base pairs are never scored. The two orientations are disjoint
+    * (`base` and `delta` hold disjoint ids), so no pair takes two top-`k`
+    * slots, and re-ranking a base artifact's kept lists together with
+    * this output equals the rebuild over base ∪ delta ([[HnswIndex.insert]]
+    * pigeonhole). Only the delta's buckets can hold such a pair, so
+    * `base` is semi-joined to them (the delta's keys broadcast) before its
+    * vectors are attached.
+    */
+  private[graft] def bandedInsertTopK(base: DataFrame, delta: DataFrame,
+      emb: DataFrame, k: Int): DataFrame = {
+    val baseInDeltaBuckets = base.join(
+      broadcast(delta.select(col("band"), col("bucket"))),
+      Seq("band", "bucket"), "left_semi")
+    topKMerge(withRole(baseInDeltaBuckets, NodeRole | NbrRole | BaseRole)
+      .unionByName(withRole(delta, NodeRole | NbrRole)), emb, k)
+  }
+
+  private def withRole(banded: DataFrame, role: Int): DataFrame =
+    banded.select(col("vec_id"), col("band"), col("bucket"),
+      lit(role).as("role"))
+
+  private def topKMerge(members: DataFrame, emb: DataFrame,
+      k: Int): DataFrame = {
+    require(k > 0, s"k must be positive, got $k")
+    import org.apache.spark.sql.Encoders
+    val perBucket = members
+      .join(emb.select(col("vec_id"), col("v")), "vec_id")
+      .repartition(bucketPartitions(members.sparkSession),
+        col("band"), col("bucket"))
+      .groupBy(col("band"), col("bucket"))
+      .as(Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong),
+        Encoders.product[BandMember])
+      .flatMapGroups((_, it) => bucketTopK(it, k))(
+        Encoders.product[ScoredPair])
+      .toDF()
+    // a pair cohabiting several bands arrives once per band with the
+    // same (ncos, nbr): dense_rank gives its copies one rank, so
+    // rank ≤ k keeps exactly the k best distinct pairs, and the dedup
+    // rides the window's node partitioning (no second exchange)
+    val w = Window.partitionBy(col("node"))
       .orderBy(col("ncos").desc, col("nbr"))
-    scored.withColumn("rn", row_number().over(wN))
-      .filter(col("rn") <= degree)
+    perBucket.withColumn("r", dense_rank().over(w))
+      .filter(col("r") <= k)
+      .dropDuplicates("node", "nbr")
       .select(col("node"), col("nbr"), col("ncos"))
   }
 
+  /** Each node member's top-`k` qualifying nbr members of one bucket. */
+  private def bucketTopK(members: Iterator[BandMember],
+      k: Int): Iterator[ScoredPair] = {
+    val all = members.toArray
+    val nbrs = all.filter(m => (m.role & NbrRole) != 0)
+    all.iterator.filter(m => (m.role & NodeRole) != 0).flatMap { x =>
+      val cos = new Array[Double](k)
+      val ids = new Array[Long](k)
+      var n = 0
+      var j = 0
+      while (j < nbrs.length) {
+        val y = nbrs(j)
+        if (y.vec_id != x.vec_id && (x.role & y.role & BaseRole) == 0) {
+          val c = dotFold(x.v, y.v)
+          if (n < k || ranksBefore(c, y.vec_id, cos(k - 1), ids(k - 1))) {
+            var i = if (n < k) n else k - 1
+            while (i > 0 && ranksBefore(c, y.vec_id, cos(i - 1), ids(i - 1))) {
+              cos(i) = cos(i - 1); ids(i) = ids(i - 1); i -= 1
+            }
+            cos(i) = c; ids(i) = y.vec_id
+            if (n < k) n += 1
+          }
+        }
+        j += 1
+      }
+      Iterator.tabulate(n)(i => ScoredPair(x.vec_id, ids(i), cos(i)))
+    }
+  }
+
+  /** Σ aᵢ·bᵢ in [[graft.functions.expressions.DotProduct]]'s order. */
+  private def dotFold(a: Array[Double], b: Array[Double]): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < a.length) { acc += a(i) * b(i); i += 1 }
+    acc
+  }
+
+  /** (ncos DESC, nbr ASC) with Spark's double ordering (0.0 = −0.0, NaN
+    * above every number).
+    */
+  private def ranksBefore(c: Double, id: Long, c0: Double,
+      id0: Long): Boolean = {
+    val cmp = if (c == c0) 0 else java.lang.Double.compare(c, c0)
+    cmp > 0 || (cmp == 0 && id < id0)
+  }
+
   /** The directed score-carrying out-adjacency build (full corpus):
-    * banding → bucket cogroup → exact scoring → per-node top-`degree`.
+    * banding → [[bandedTopK]] at `degree`.
     */
   private[graft] def hnswOutInline(s: SparkSession, dir: String,
       bitsPerBand: Int, bands: Int, degree: Int): DataFrame = {
     val emb = embeddings(s, dir)
-    val banded = hnswBanded(emb, bitsPerBand, bands)
-    hnswTopOut(hnswScore(hnswCohabit(banded, banded), emb), degree)
+    bandedTopK(hnswBanded(emb, bitsPerBand, bands), emb, degree)
   }
 
   /** The HNSW search's final beam — per query the exact-scored
@@ -2905,11 +2995,11 @@ object SimilarityOps {
     * INSERTS arriving vectors; it never rebuilds the graph per batch.
     * Base = `vec_id % 10 ≠ 9` (the persisted snapshot: top-`Degree`
     * score-carrying out-lists over base-only bucket cohabitants), delta =
-    * the rest. Maintenance generates ONLY the delta-involving candidate
-    * pairs (delta banding joined against the full banding, both
-    * orientations — |delta| × bucket occupancy work, not a corpus
-    * self-join), exact-scores them, and re-ranks each node's top-`Degree`
-    * over (kept base edges ∪ delta candidates) via [[HnswIndex.insert]] —
+    * the rest. Maintenance scores ONLY the delta-involving pairs (the
+    * banded top-K kernel's insert form: delta → all ∪ base → delta in the
+    * delta's buckets — |delta| × bucket occupancy work, not a corpus
+    * self-join), keeps each node's top-`Degree` of them, and re-ranks
+    * over (kept base edges ∪ those) via [[HnswIndex.insert]] —
     * correct by pigeonhole: a rebuild's pick is either delta-involving
     * (all present) or a base-base edge that outranked all but < Degree
     * base candidates (so it survived the base artifact's own cut).
@@ -2922,10 +3012,10 @@ object SimilarityOps {
     * [[HnswIndex.buildOut]]) plus the save/load round trip.
     *
     * Scale shape: both eras are narrow filters of ONE banding pass; the
-    * base build is the audited bucket cogroup over the base era; the
-    * maintenance join is delta-banding-sized on one side; scoring is two
-    * id-keyed lookups per candidate; the re-rank window is bounded by
-    * degree + per-node delta candidates. No corpus×corpus anywhere.
+    * base build is the banded top-K kernel over the base era; the
+    * maintenance pass is delta-banding-sized on one side; the re-rank
+    * window is bounded by 2 × degree rows per node. No corpus×corpus
+    * anywhere.
     */
   def incrementalHnsw(s: SparkSession, dir: String): DataFrame = {
     val emb = embeddings(s, dir)
@@ -2938,13 +3028,10 @@ object SimilarityOps {
     val bandedDelta = banded.filter(isDelta)
     // the persisted artifact, built here from the base era (production
     // loads it via HnswIndex.loadOut — parquet round-trip exact)
-    val baseOut = hnswTopOut(
-      hnswScore(hnswCohabit(bandedBase, bandedBase), emb), HnswIndex.Degree)
-    // delta-involving candidates only: (delta → any) ∪ (any → delta)
-    val deltaCand = hnswCohabit(bandedDelta, banded)
-      .unionByName(hnswCohabit(banded, bandedDelta))
-      .distinct()
-    val maintained = HnswIndex.insert(baseOut, hnswScore(deltaCand, emb))
+    val baseOut = bandedTopK(bandedBase, emb, HnswIndex.Degree)
+    // delta-involving pairs only: (delta → any) ∪ (base → delta)
+    val maintained = HnswIndex.insert(baseOut,
+      bandedInsertTopK(bandedBase, bandedDelta, emb, HnswIndex.Degree))
     val sym = maintained.select(col("node"), col("nbr"))
       .unionByName(maintained.select(col("nbr").as("node"),
         col("node").as("nbr")))
@@ -3804,11 +3891,11 @@ object SimilarityOps {
     * share no bucket; a production pass tunes bands/bits until the
     * measured recall at [[SemDedupCos]] meets its audit bar.
     *
-    * Scale shape: the [[knnJoin]] machinery with the eval family as the
-    * probe side — banding both sides, ONE eval×train bucket cogroup
-    * (never eval×train all-pairs, never train×train anything), exact
-    * verify on candidates only, per-eval top-1 window; the final left
-    * join keys on the eval family. Exactly the shape a production
+    * Scale shape: the [[knnJoin]] kernel with the eval family as the
+    * node side — banding both sides, ONE banded top-K pass at k = 1
+    * (eval × train pairs within shared buckets only, never eval×train
+    * all-pairs, never train×train anything), per-eval top-1 merge; the
+    * final left join keys on the eval family. Exactly the shape a production
     * decontamination pass runs per benchmark release.
     */
   def contaminationSemantic(s: SparkSession, dir: String): DataFrame = {
@@ -3817,8 +3904,7 @@ object SimilarityOps {
     val bits = derivedBits(s, dir)
     val bandedE = hnswBanded(emb.filter(isEval), bits, bandsFor(bits))
     val bandedT = hnswBanded(emb.filter(!isEval), bits, bandsFor(bits))
-    val top1 = hnswTopOut(
-      hnswScore(hnswCohabit(bandedE, bandedT), emb), 1)
+    val top1 = bandedTopK(bandedE, bandedT, emb, 1)
     emb.filter(isEval).select(col("vec_id").as("eval_id"))
       .join(top1, col("eval_id") === col("node"), "left")
       .select(col("eval_id"), col("nbr").as("train_id"),
@@ -3872,7 +3958,7 @@ object SimilarityOps {
     * derived default holds ≥ 0.8 at scale (SCALE.md r17 table); at the
     * gate corpus the banding sits at tuned occupancy and recall is high.
     *
-    * Scale shape: the lists build is the audited bucket cogroup; the
+    * Scale shape: the lists build is the banded top-K kernel; the
     * exact side is |sample|-bounded (broadcast sample against one corpus
     * scan + one per-node top-K window); the comparison is a semi-join on
     * (node, nbr) and three 1-row aggregates. Sampled-exact is the

@@ -13,7 +13,7 @@ import graft.ops.{HnswIndex, SimilarityOps}
   * 8×10/degree-20 build config) and [[StreamingKnn]] (the corpus-wide
   * kNN lists at the 4×20/top-K search config). The two artifacts are
   * the SAME algebra at different constants — per-node top-`degree` by
-  * (ncos DESC, nbr) over banded-cogroup candidates — so they share one
+  * (ncos DESC, nbr) over bucket-cohabiting candidates — so they share one
   * implementation instead of two drifting copies (the r15 review's
   * SessionSeam/compactStore lesson applied preemptively; every
   * durability property hardened on the HNSW form — write ordering,
@@ -24,12 +24,13 @@ import graft.ops.{HnswIndex, SimilarityOps}
   * Vectors arriving as files in a monitored folder are INSERTED into
   * the persisted artifact via the [[HnswIndex.insert]] pigeonhole
   * re-rank — never a rebuild. Each micro-batch bands its novel vectors,
-  * cogroups them against the banded store (delta × (base ∪ delta),
-  * never base × base), exact-scores the delta-involving pairs, and
-  * re-ranks per-node top-`degree` over (prior artifact ∪ delta
-  * candidates). The pigeonhole argument composes inductively across
-  * batches: after any drain the artifact equals the one-shot build over
-  * everything seen, REGARDLESS of how arrivals were chopped —
+  * runs the banded top-K kernel's insert form against the banded store
+  * (delta → (base ∪ delta) and base → delta, never base × base) to keep
+  * each node's top-`degree` delta-involving pairs, and re-ranks per-node
+  * top-`degree` over (prior artifact ∪ those). The pigeonhole argument
+  * composes inductively across batches: after any drain the artifact
+  * equals the one-shot build over everything seen, REGARDLESS of how
+  * arrivals were chopped —
   * StreamingHnswSpec / StreamingKnnSpec pin exact row equality.
   *
   * Stores under `storePath` (all tag-partitioned for the at-least-once
@@ -40,11 +41,14 @@ import graft.ops.{HnswIndex, SimilarityOps}
   * with a monotone `seq` (maintenance can evict a base edge, so
   * versions, not deltas); [[outAdjacency]] serves the winning version.
   *
-  * Scale: per batch the work is |delta banding| × bucket occupancy
-  * candidates + id-keyed vector lookups + the artifact re-rank (node-
-  * bounded window) — no corpus self-join, no stateful operator; the
+  * Scale: per batch, the base band rows in the delta's buckets and the
+  * delta's own band rows, each with its vector attached, go through ONE
+  * (band, bucket) exchange; each bucket scores |delta| × occupancy dots
+  * and ships at most `degree` rows per node and band into one node-keyed
+  * merge, then the artifact re-rank (≤ 2·degree rows per node). No
+  * candidate-pair table, no corpus self-join, no stateful operator; the
   * index lives in the store exactly as a production serving deployment
-  * keeps it.
+  * keeps it. Compaction's repair is the same kernel, damaged → survivors.
   */
 private[streaming] final class BandedTopKMaintainer(
     bitsPerBand: Int, bands: Int, degree: Int,
@@ -205,10 +209,8 @@ private[streaming] final class BandedTopKMaintainer(
     val vecsLive = live(
       readStore(spark, s"$storePath/vecs", vecsSchema)
         .select(col("vec_id"), col("v")), spark, storePath)
-    val repaired = SimilarityOps.hnswTopOut(
-      SimilarityOps.hnswScore(
-        SimilarityOps.hnswCohabit(bandedDamaged, bandedSurv), vecsLive),
-      degree)
+    val repaired = SimilarityOps.bandedTopK(bandedDamaged, bandedSurv,
+      vecsLive, degree)
     kept.unionByName(repaired)
       .withColumn("seq", lit(prevSeq + 1L))
       .write.mode(SaveMode.Overwrite)
@@ -391,13 +393,9 @@ private[streaming] final class BandedTopKMaintainer(
         bitsPerBand, bands).localCheckpoint()
       // candidates come from LIVE ids only — a tombstoned waypoint must
       // not gain new edges (post-compact inserts stay rebuild-exact)
-      val bandedAll = live(notOwn(
+      val bandedBase = live(notOwn(
           readStore(spark, s"$storePath/banded", bandedSchema))
         .select(col("vec_id"), col("band"), col("bucket")), spark, storePath)
-        .unionByName(bandedDelta)
-      val deltaCand = SimilarityOps.hnswCohabit(bandedDelta, bandedAll)
-        .unionByName(SimilarityOps.hnswCohabit(bandedAll, bandedDelta))
-        .distinct()
       val embAll = vecsStore.unionByName(novel)
       val outStore = notOwn(readOutCommitted(spark, storePath))
       val win = winningVersion(outStore)
@@ -408,6 +406,10 @@ private[streaming] final class BandedTopKMaintainer(
           .filter(col("seq") === s && col("batch") === b)
           .select(col("node"), col("nbr"), col("ncos"))
       }
+      // delta-involving pairs only, kept at their top-degree (a novel id is
+      // never in the base store, so the insert form's split is disjoint)
+      val deltaScored0 = SimilarityOps.bandedInsertTopK(bandedBase,
+        bandedDelta, embAll, degree)
       // supersede the artifact's copy of any pair the delta re-scores
       // (identical ncos — the score is a pure function of the immutable
       // vectors): in the blessed crash window — a prior attempt's
@@ -419,8 +421,9 @@ private[streaming] final class BandedTopKMaintainer(
       // r15 s2 review found it). GATED on the retry signal: in normal
       // operation the sets are provably disjoint (a novel id can't
       // already be an artifact neighbor), so first attempts skip the
-      // artifact-sized anti-join shuffle entirely (review #3).
-      val deltaScored0 = SimilarityOps.hnswScore(deltaCand, embAll)
+      // artifact-sized anti-join shuffle entirely (review #3). Superseding
+      // only the delta's kept pairs stays exact: a prior copy of a delta
+      // pair outside them has `degree` better delta pairs, all kept.
       val deltaScored = if (retriedAttempt)
         deltaScored0.localCheckpoint() // anti-join + insert both read it
       else deltaScored0

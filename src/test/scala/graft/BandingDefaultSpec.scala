@@ -201,8 +201,8 @@ class BandingDefaultSpec extends AnyFunSuite {
     val banded = SimilarityOps.hnswBanded(emb, bits, bands)
     val w = Window.partitionBy(col("node"))
       .orderBy(col("ncos").desc, col("nbr"))
-    val lists = SimilarityOps
-      .hnswScore(SimilarityOps.hnswCohabit(banded, banded), emb)
+    val lists = KnnReference
+      .hnswScore(KnnReference.hnswCohabit(banded, banded), emb)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("node"), col("nbr"))

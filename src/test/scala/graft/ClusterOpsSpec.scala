@@ -33,6 +33,24 @@ class ClusterOpsSpec extends AnyFunSuite {
     assert(components(Seq.empty).isEmpty)
   }
 
+  test("compress precondition: hook labels satisfy rep <= id, and compress resolves them to the pointer-chase roots") {
+    // a long reversed chain (deep hook trees), a star, a clique and a
+    // pair: the shapes whose hook forests compress needs several rounds on
+    val edges = (0L until 40L).map(i => (i + 1, i)) ++
+      (201L to 210L).map(i => (200L, i)) ++
+      Seq((300L, 301L), (301L, 302L), (300L, 302L), (500L, 400L))
+    val e = edges.toDF("src", "dst")
+    val sym = e.union(e.select($"dst".as("src"), $"src".as("dst")))
+    val hook = ClusterOps.hook(sym).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val violations = hook.filter { case (id, rep) => rep > id }
+    assert(violations.isEmpty, s"hook labels with rep > id: $violations")
+    def root(x: Long): Long = { val r = hook(x); if (r == x) x else root(r) }
+    val compressed = ClusterOps.compress(ClusterOps.hook(sym), 25).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(compressed == hook.keys.map(x => x -> root(x)).toMap)
+  }
+
   private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = {

@@ -815,7 +815,7 @@ class DedupOpsSpec extends AnyFunSuite {
       .select(col("vec_id"), normalize(toDoubleArray(col("embedding"))).as("v"))
     val banded = SimilarityOps.hnswBanded(emb, 4, 20)
     val distinctPairs =
-      SimilarityOps.hnswCohabit(banded, banded).count()
+      KnnReference.hnswCohabit(banded, banded).count()
     assert(distinctPairs <= rows.map(_._5).sum,
       "distinct pairs exceed the union bound")
     assert(distinctPairs >= rows.map(_._5).max,

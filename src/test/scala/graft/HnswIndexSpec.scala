@@ -84,17 +84,17 @@ class HnswIndexSpec extends AnyFunSuite {
       val isDelta = pmod(col("vec_id"), lit(10)) === 9
       val banded = SimilarityOps.hnswBanded(emb,
         HnswIndex.BitsPerBand, HnswIndex.Bands)
-      val baseOut = SimilarityOps.hnswTopOut(
-        SimilarityOps.hnswScore(
-          SimilarityOps.hnswCohabit(banded.filter(!isDelta),
+      val baseOut = KnnReference.hnswTopOut(
+        KnnReference.hnswScore(
+          KnnReference.hnswCohabit(banded.filter(!isDelta),
             banded.filter(!isDelta)), emb), HnswIndex.Degree)
       HnswIndex.saveOut(baseOut, s"$out/base")
-      val deltaCand = SimilarityOps.hnswCohabit(banded.filter(isDelta), banded)
-        .unionByName(SimilarityOps.hnswCohabit(banded, banded.filter(isDelta)))
+      val deltaCand = KnnReference.hnswCohabit(banded.filter(isDelta), banded)
+        .unionByName(KnnReference.hnswCohabit(banded, banded.filter(isDelta)))
         .distinct()
       val maintained = HnswIndex.insert(
         HnswIndex.loadOut(spark, s"$out/base"),
-        SimilarityOps.hnswScore(deltaCand, emb))
+        KnnReference.hnswScore(deltaCand, emb))
       val m = bag(maintained)
       assert(m.nonEmpty, "maintained adjacency empty — test vacuous")
       assert(m == bag(full),
@@ -138,21 +138,21 @@ class HnswIndexSpec extends AnyFunSuite {
         df.collect().map(r => (r.getLong(0), r.getLong(1),
           BigDecimal(r.getDouble(2)).setScale(9,
             BigDecimal.RoundingMode.HALF_UP))).toSeq.sorted
-      val full = SimilarityOps.hnswTopOut(
-        SimilarityOps.hnswScore(
-          SimilarityOps.hnswCohabit(banded, banded), emb), degree)
+      val full = KnnReference.hnswTopOut(
+        KnnReference.hnswScore(
+          KnnReference.hnswCohabit(banded, banded), emb), degree)
       // random era split — including all-delta and all-base corners
       val isDelta = pmod(col("vec_id") + seed, lit(3)) === 0
       val bandedBase = banded.filter(!isDelta)
       val bandedDelta = banded.filter(isDelta)
-      val baseOut = SimilarityOps.hnswTopOut(
-        SimilarityOps.hnswScore(
-          SimilarityOps.hnswCohabit(bandedBase, bandedBase), emb), degree)
-      val deltaCand = SimilarityOps.hnswCohabit(bandedDelta, banded)
-        .unionByName(SimilarityOps.hnswCohabit(banded, bandedDelta))
+      val baseOut = KnnReference.hnswTopOut(
+        KnnReference.hnswScore(
+          KnnReference.hnswCohabit(bandedBase, bandedBase), emb), degree)
+      val deltaCand = KnnReference.hnswCohabit(bandedDelta, banded)
+        .unionByName(KnnReference.hnswCohabit(banded, bandedDelta))
         .distinct()
       val maintained = HnswIndex.insert(baseOut,
-        SimilarityOps.hnswScore(deltaCand, emb), degree)
+        KnnReference.hnswScore(deltaCand, emb), degree)
       bag(maintained) == bag(full)
     }
     val res = SCTest.check(
@@ -193,18 +193,18 @@ class HnswIndexSpec extends AnyFunSuite {
             BigDecimal.RoundingMode.HALF_UP))).toSeq.sorted
       def build(pred: org.apache.spark.sql.Column) = {
         val b = banded.filter(pred)
-        SimilarityOps.hnswTopOut(
-          SimilarityOps.hnswScore(SimilarityOps.hnswCohabit(b, b), emb), k)
+        KnnReference.hnswTopOut(
+          KnnReference.hnswScore(KnnReference.hnswCohabit(b, b), emb), k)
       }
       def insert(lists: org.apache.spark.sql.DataFrame,
           basePred: org.apache.spark.sql.Column,
           deltaPred: org.apache.spark.sql.Column) = {
         val bBase = banded.filter(basePred)
         val bDelta = banded.filter(deltaPred)
-        val deltaScored = SimilarityOps.hnswScore(
-          SimilarityOps.hnswCohabit(bDelta, bBase.unionByName(bDelta))
-            .unionByName(SimilarityOps.hnswCohabit(bBase, bDelta)), emb)
-        SimilarityOps.hnswTopOut(lists.unionByName(deltaScored), k)
+        val deltaScored = KnnReference.hnswScore(
+          KnnReference.hnswCohabit(bDelta, bBase.unionByName(bDelta))
+            .unionByName(KnnReference.hnswCohabit(bBase, bDelta)), emb)
+        KnnReference.hnswTopOut(lists.unionByName(deltaScored), k)
       }
       def deleteRepair(lists: org.apache.spark.sql.DataFrame,
           corpusPred: org.apache.spark.sql.Column,
@@ -217,9 +217,9 @@ class HnswIndexSpec extends AnyFunSuite {
         val bandedDamaged = bandedSurv
           .join(damaged.select(col("node").as("vec_id")), Seq("vec_id"),
             "left_semi")
-        kept.unionByName(SimilarityOps.hnswTopOut(
-          SimilarityOps.hnswScore(
-            SimilarityOps.hnswCohabit(bandedDamaged, bandedSurv), emb), k))
+        kept.unionByName(KnnReference.hnswTopOut(
+          KnnReference.hnswScore(
+            KnnReference.hnswCohabit(bandedDamaged, bandedSurv), emb), k))
       }
       // eras: (id + seed) % 3 — 0 is the base build, 1 the first insert,
       // 2 the post-delete insert; deletes: id % 10 == mod (pre-deleted
@@ -271,9 +271,9 @@ class HnswIndexSpec extends AnyFunSuite {
           BigDecimal(r.getDouble(2)).setScale(9,
             BigDecimal.RoundingMode.HALF_UP))).toSeq.sorted
       // maintained: keep undamaged survivor lists, re-probe damaged only
-      val full = SimilarityOps.hnswTopOut(
-        SimilarityOps.hnswScore(
-          SimilarityOps.hnswCohabit(banded, banded), emb), degree)
+      val full = KnnReference.hnswTopOut(
+        KnnReference.hnswScore(
+          KnnReference.hnswCohabit(banded, banded), emb), degree)
         .localCheckpoint()
       val surviving = full.filter(!dead(col("node")))
       val deadIds = emb.filter(dead(col("vec_id")))
@@ -286,14 +286,14 @@ class HnswIndexSpec extends AnyFunSuite {
       val bandedDamaged = bandedSurv
         .join(damaged.select(col("node").as("vec_id")), Seq("vec_id"),
           "left_semi")
-      val repaired = SimilarityOps.hnswTopOut(
-        SimilarityOps.hnswScore(
-          SimilarityOps.hnswCohabit(bandedDamaged, bandedSurv), emb), degree)
+      val repaired = KnnReference.hnswTopOut(
+        KnnReference.hnswScore(
+          KnnReference.hnswCohabit(bandedDamaged, bandedSurv), emb), degree)
       val maintained = bag(kept.unionByName(repaired))
       // rebuild over survivors from scratch
-      val rebuilt = bag(SimilarityOps.hnswTopOut(
-        SimilarityOps.hnswScore(
-          SimilarityOps.hnswCohabit(bandedSurv, bandedSurv), emb), degree))
+      val rebuilt = bag(KnnReference.hnswTopOut(
+        KnnReference.hnswScore(
+          KnnReference.hnswCohabit(bandedSurv, bandedSurv), emb), degree))
       maintained == rebuilt
     }
     val res = SCTest.check(

@@ -59,6 +59,31 @@ class JdbcSinkIntegrationSpec extends AnyFunSuite {
     } finally conn.close()
   }
 
+  test("jdbc sink truncate-loads null strings into VARCHAR and CLOB tables") {
+    import spark.implicits._
+    val dbDir = Files.createTempDirectory("graft-derby-v").resolve("db")
+    val url = s"jdbc:derby:$dbDir;create=true"
+    val conn = DriverManager.getConnection(url)
+    try {
+      conn.createStatement().executeUpdate(
+        "CREATE TABLE STOCKV (ITEMID BIGINT, ITEMNAME VARCHAR(100), LASTSOLD VARCHAR(30))")
+      conn.createStatement().executeUpdate(
+        "CREATE TABLE STOCKC (ITEMID BIGINT, ITEMNAME CLOB, LASTSOLD CLOB)")
+    } finally conn.close()
+    val sink = new JdbcTableSink(cfg(), urlOverride = Some(url), quoteName = false)
+    val rows = Seq[(Long, String, String)]((1L, "Widget", null), (2L, null, "2024-01-02"))
+      .toDF("ITEMID", "ITEMNAME", "LASTSOLD")
+    for (t <- Seq("STOCKV", "STOCKC")) {
+      sink.write(rows, t)
+      val landed = spark.read.format("jdbc")
+        .option("url", url).option("dbtable", t).load()
+        .collect().map(r => (r.getLong(0), Option(r.getString(1)),
+          Option(r.getString(2)))).sortBy(_._1)
+      assert(landed.toSeq == Seq((1L, Some("Widget"), None),
+        (2L, None, Some("2024-01-02"))), t)
+    }
+  }
+
   test("resilient sink: poisoned rows are skipped mid-batch, not fatal (K3 fidelity)") {
     import spark.implicits._
     import graft.io.ResilientJdbcTableSink

@@ -326,14 +326,11 @@ class PlanLintSpec extends AnyFunSuite {
                                   // window, candidate repartition,
                                   // intersect-count agg (+sort reuses);
                                   // attach joins are AQE broadcasts
-      "ann_hnsw_topk" -> 15,      // index BUILD + search in one plan:
-                                  // candidate distinct, neighbor window,
-                                  // checkpoint boundary, entry/hop
-                                  // attaches, visited distinct, top-k
-                                  // window (+sort) — a safe upper bound;
-                                  // at serving time the adjacency is a
-                                  // materialized table and only the
-                                  // search-side exchanges remain
+      "ann_hnsw_topk" -> 2,       // the adjacency build runs eagerly
+                                  // behind its checkpoint (banded top-K
+                                  // kernel); the planned query is the
+                                  // search: visited distinct + top-k
+                                  // window (+sort reuses)
       "mmr_rerank" -> 2,          // ONE bounded-shortlist aggregate
                                   // exchange (≤50 rows per partition per
                                   // query) (+sort)
@@ -486,12 +483,13 @@ class PlanLintSpec extends AnyFunSuite {
                                   // candidate repartition, verify
                                   // intersect agg (+sort) — the inline
                                   // edge-build claim
-      "knn_join" -> 4,            // banding spread repartition (r18 —
+      "knn_join" -> 3,            // banding spread repartition (r18 —
                                   // breaks the single-file scan's
-                                  // 1-partition ceiling) + cohabit
-                                  // node-set agg + per-node top-K window
-                                  // (+sort); vector attaches are AQE
-                                  // broadcasts
+                                  // 1-partition ceiling; the banded
+                                  // top-K kernel's bucket exchange rides
+                                  // it behind the broadcast vector
+                                  // attach) + the kernel's node merge
+                                  // (the rank window reuses it) (+sort)
       "cardinality_sketches" -> 4, // HLL/percentile sketch agg + the
                                   // deliberate exact-distinct audit
                                   // baseline on its OWN two-phase agg
@@ -527,40 +525,43 @@ class PlanLintSpec extends AnyFunSuite {
       "bpe_train" -> 1,           // 8 rounds ride per-round checkpoints
                                   // (Zipf-small word table); planned tail
                                   // is one pair-count agg (+TakeOrdered)
-      "incremental_hnsw" -> 13,   // base out-build (cohabit distinct +
-                                  // top-degree window) + delta cohabits +
-                                  // maintained re-rank window + sym
-                                  // distinct + digest agg (+sort) — the
+      "incremental_hnsw" -> 11,   // base out-build (kernel bucket
+                                  // exchange + node merge) + the insert
+                                  // form (bucket exchange + merge) +
+                                  // maintained re-rank + sym distinct +
+                                  // digest agg (+sort) — the
                                   // rebuild-vs-maintain proof runs both
       "incremental_sparse" -> 3,  // 2 era term-stat aggs off the seam tf
                                   // + the full-outer merge; 1-row digest,
                                   // no sort
-      "knn_mutual" -> 10,         // unseeded: the lists build (cohabit
-                                  // distinct + top-K window, checkpoint
-                                  // boundary) + the mutual semi-join +
-                                  // two SNN joins + pair agg + left
-                                  // attach (+sort); seeded sessions skip
-                                  // the build — artifact-only consumer
+      "knn_mutual" -> 10,         // unseeded: the lists build (banded
+                                  // top-K kernel, checkpoint boundary) +
+                                  // the mutual semi-join + two SNN joins
+                                  // + pair agg + left attach (+sort);
+                                  // seeded sessions skip the build —
+                                  // artifact-only consumer
       "snn_clusters" -> 1,        // lists + closure propagation ride
                                   // checkpoints (knnMutual boundary +
                                   // ClusterOps levels); planned tail is
                                   // the label rollup (+sort)
-      "knn_damage_stats" -> 3,    // the lists build (cohabit distinct +
-                                  // top-K window, checkpoint boundary) +
+      "knn_damage_stats" -> 3,    // the lists build (banded top-K
+                                  // kernel, checkpoint boundary) +
                                   // the node-distinct audit; the two
                                   // 1-row audits agg behind it, no sort
-      "incremental_knn" -> 6,     // the base lists build (cohabit distinct
-                                  // + top-K window, checkpoint boundary) +
-                                  // the delta cohabit distinct + the
-                                  // maintained re-rank window (+sort) —
-                                  // build AND maintenance run by design
-      "knn_delete_repair" -> 9,   // the artifact build (cohabit distinct +
-                                  // top-K window, checkpoint boundary) +
-                                  // the bounded damaged re-probe (cohabit
-                                  // distinct + window) + union (+sort) —
-                                  // build AND repair run by design
-      "semdedup_knn" -> 5,        // the knn artifact build (cohabit
-                                  // distinct + top-K window) + the CC
+      "incremental_knn" -> 5,     // the base lists build and the insert
+                                  // form over the checkpointed banding
+                                  // (bucket exchange + node merge each);
+                                  // the re-rank window rides the merges'
+                                  // node partitioning (+sort) — build
+                                  // AND maintenance run by design
+      "knn_delete_repair" -> 9,   // the artifact build (banded top-K
+                                  // kernel, checkpoint boundary) + the
+                                  // damaged re-probe (damage semi-join,
+                                  // banding, node merge) + keep anti-join
+                                  // (+sort) — build AND repair run by
+                                  // design
+      "semdedup_knn" -> 5,        // the knn artifact build (banded
+                                  // top-K kernel) + the CC
                                   // closure's planned tail (propagation
                                   // behind checkpoints) (+sort)
       "dsir_weights" -> 8,        // doc×bucket agg + B-row dist agg +
@@ -575,9 +576,10 @@ class PlanLintSpec extends AnyFunSuite {
       "gopher_rules" -> 2,        // narrow per-row map (+sort only)
       "ssl_prototypes" -> 4,      // centroid (label,dim)+label aggs +
                                   // per-label rank window (+sort)
-      "contamination_semantic" -> 5, // banding spread repartition (r18)
-                                  // + banded cogroup + top-1 window +
-                                  // eval left join (+sort)
+      "contamination_semantic" -> 5, // both sides' banding spread
+                                  // repartitions (r18; the kernel's
+                                  // bucket exchange rides them) + top-1
+                                  // node merge + eval left join (+sort)
       "soft_dedup" -> 9,          // cluster-size agg + doc joins (+sort)
                                   // over the label artifact's planned
                                   // tail (unseeded; seam removes it)
@@ -614,9 +616,9 @@ class PlanLintSpec extends AnyFunSuite {
                                   // count is a separate action at
                                   // construction (the audited census
                                   // scalar pattern)
-      "knn_recall_audit" -> 8,    // banding spread repartition (r18) +
-                                  // the lists build (cohabit node-set
-                                  // agg + top-K window) + the
+      "knn_recall_audit" -> 7,    // banding spread repartition (r18) +
+                                  // the lists build (banded top-K
+                                  // kernel's node merge) + the
                                   // sample-bounded exact window + hit
                                   // semi-join + 1-row aggregates (truth
                                   // side rides its checkpoint)

@@ -41,9 +41,9 @@ class StreamingHnswSpec extends AnyFunSuite {
       normalize(toDoubleArray(col("embedding"))).as("v"))
     val banded = SimilarityOps.hnswBanded(e,
       HnswIndex.BitsPerBand, HnswIndex.Bands)
-    bag(SimilarityOps.hnswTopOut(
-      SimilarityOps.hnswScore(
-        SimilarityOps.hnswCohabit(banded, banded), e), HnswIndex.Degree))
+    bag(KnnReference.hnswTopOut(
+      KnnReference.hnswScore(
+        KnnReference.hnswCohabit(banded, banded), e), HnswIndex.Degree))
   }
 
   test("insert ≡ rebuild chop-independently; delete+compact ≡ survivor rebuild; post-compact insert stays exact; re-drain no-op") {

@@ -35,9 +35,9 @@ class StreamingKnnSpec extends AnyFunSuite {
       normalize(toDoubleArray(col("embedding"))).as("v"))
     val banded = SimilarityOps.hnswBanded(e,
       SimilarityOps.KnnBitsPerBand, SimilarityOps.KnnBands)
-    bag(SimilarityOps.hnswTopOut(
-      SimilarityOps.hnswScore(
-        SimilarityOps.hnswCohabit(banded, banded), e), SimilarityOps.K))
+    bag(KnnReference.hnswTopOut(
+      KnnReference.hnswScore(
+        KnnReference.hnswCohabit(banded, banded), e), SimilarityOps.K))
   }
 
   test("insert ≡ knn_join build chop-independently; delete+compact ≡ survivor rebuild; post-compact insert stays exact; re-drain no-op") {

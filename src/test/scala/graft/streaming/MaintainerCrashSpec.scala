@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.VectorFunctions.{normalize, toDoubleArray}
+import graft.KnnReference
 import graft.ops.SimilarityOps
 
 /** The crash window the maintainer's write ordering deliberately permits,
@@ -43,9 +44,9 @@ class MaintainerCrashSpec extends AnyFunSuite {
       normalize(toDoubleArray(col("embedding"))).as("v"))
     val banded = SimilarityOps.hnswBanded(e,
       SimilarityOps.KnnBitsPerBand, SimilarityOps.KnnBands)
-    bag(SimilarityOps.hnswTopOut(
-      SimilarityOps.hnswScore(
-        SimilarityOps.hnswCohabit(banded, banded), e), SimilarityOps.K))
+    bag(KnnReference.hnswTopOut(
+      KnnReference.hnswScore(
+        KnnReference.hnswCohabit(banded, banded), e), SimilarityOps.K))
   }
 
   test("compact inside the crash window, then the retry: artifact lands on the rebuild exactly") {
