@@ -1,5 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
+
+import org.json4s.{JDouble, JInt, JObject, JString}
+import org.json4s.jackson.JsonMethods
 
 /** Driver-run perf surface: every SparkEntry query timed at the configured
   * scale factor, one JSON line out (BASELINE.md bench bar).
@@ -25,7 +29,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   private val Reps = 3
 
-  private def median(xs: Seq[Double]): Double = {
+  private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
@@ -78,17 +82,17 @@ object Bench {
     val maxRound = sys.env.get("SPARK_GRAFT_BENCH_ROUND")
       .flatMap(_.trim.toIntOption)
     val explicit = sys.env.get("SPARK_GRAFT_BENCH_PREV")
-    val path: Option[java.nio.file.Path] = explicit match {
-      case Some(p) => Some(java.nio.file.Paths.get(p))
+    val path: Option[Path] = explicit match {
+      case Some(p) => Some(Paths.get(p))
       case None =>
         // name shape: bench_r<N>[_s<W>]_close[<K>].json — ordered
         // NUMERICALLY on (round, wave, re-close) so s10 beats s9 and a
         // close2 re-record beats the superseded close (r16 review; the
         // repo already has bench_r15_s2_close2.json)
         val re = "bench_r(\\d+)(?:_s(\\d+))?_close(\\d*)\\.json".r
-        val dir = java.nio.file.Paths.get("scripts")
+        val dir = Paths.get("scripts")
         try {
-          val listing = java.nio.file.Files.list(dir)
+          val listing = Files.list(dir)
           try {
             import scala.jdk.CollectionConverters._
             listing.iterator().asScala
@@ -113,96 +117,84 @@ object Bench {
     path.fold(Map.empty[String, Double])(loadPrevRoundFrom(_, sfDir))
   }
 
-  private[graft] def loadPrevRoundFrom(p: java.nio.file.Path,
+  private[graft] def loadPrevRoundFrom(p: Path,
       sfDir: String): Map[String, Double] = {
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8)
-        val prevSf = "\"sf\"\\s*:\\s*\"([^\"]+)\"".r
-          .findFirstMatchIn(txt).map(_.group(1))
-        if (!prevSf.contains(sfDir)) {
-          System.err.println(s"[bench] prev round at $p is sf=" +
-            s"${prevSf.getOrElse("?")}, run is at $sfDir — drift detector off")
-          Map.empty
-        } else {
-          val qIdx = txt.indexOf("\"queries\"")
-          if (qIdx < 0) Map.empty
-          else {
-            // format coupling (ADVICE r16): this reader assumes the
-            // writer below — a FLAT "queries" object, first '}' after
-            // the key closes it, no nested values. A nested value or a
-            // number-shaped key before the map would silently truncate
-            // or pollute the baseline, so a shape floor guards it: a
-            // real close record carries the full registry (hundreds of
-            // entries); anything tiny is a parse gone wrong.
-            val body = txt.substring(qIdx, txt.indexOf("}", qIdx) + 1)
-            val qs = "\"([A-Za-z0-9_]+)\"\\s*:\\s*(-?[0-9.]+)".r
-              .findAllMatchIn(body)
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap - "queries"
-            if (qs.size < 50) {
-              System.err.println(s"[bench] drift baseline at $p parsed " +
-                s"only ${qs.size} queries — shape mismatch, detector off")
-              Map.empty
-            } else {
-              System.err.println(
-                s"[bench] drift baseline: $p (${qs.size} queries)")
-              qs
-            }
-          }
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] no prev round at $p: ${e.getMessage}")
-        Map.empty
-      }
+    val qs = readRecord(p, "queries", sfDir)
+    // shape floor (ADVICE r16): a real close record carries the full
+    // registry (hundreds of entries); anything tiny is the wrong file or
+    // a writer/reader format drift, never a baseline
+    if (qs.size < 50) {
+      // an empty map was already explained by readRecord
+      if (qs.nonEmpty) System.err.println(s"[bench] drift baseline at $p " +
+        s"holds only ${qs.size} queries — shape mismatch, detector off")
+      Map.empty
+    } else {
+      System.err.println(s"[bench] drift baseline: $p (${qs.size} queries)")
+      qs
+    }
   }
 
-  /** Bench run order: name-sorted (the driver-comparable default every
-    * prior round used), or — under SPARK_GRAFT_BENCH_ORDER=shuffled — a
-    * FIXED-SEED permutation of the sorted list. Purpose (VERDICT r17 #3):
-    * the recurring driver contention signature is a CONTIGUOUS
-    * alphabetical band of above-floor flags; under a shuffled order a
-    * load window covering a contiguous stretch of wall-clock should flag
-    * a set that is NOT name-contiguous, converting the narrative into a
-    * testable property. Fixed seed (180001) so two shuffled runs are
-    * rep-for-rep comparable; deterministic given the name set (pinned in
-    * BenchSpec).
+  /** The committed per-query floors (`scripts/bench_floors.json`, the
+    * builder's quiet-box record): its "floors" map, or empty when the file
+    * is missing, unreadable or seeded at another sf than this run's. A
+    * failed reading (-1) is no floor: its bar would flag every query.
     */
-  private[graft] def orderNames(names: Seq[String],
-      shuffled: Boolean): Seq[String] = {
-    val sorted = names.sorted
-    if (shuffled) new scala.util.Random(180001L).shuffle(sorted) else sorted
-  }
+  private[graft] def loadFloors(p: Path, sfDir: String): Map[String, Double] =
+    readRecord(p, "floors", sfDir).filter(_._2 >= 0)
+
+  /** The numeric members of the `key` object of the bench record at `p`
+    * (non-numeric members such as `_comment` are skipped). Empty, with
+    * the reason on stderr, when the file cannot be read or parsed, or when
+    * its "sf" is not `sfDir`: records hold per-SF absolute seconds, so
+    * applying sf0.1 numbers at sf0.001 would trivially corroborate every
+    * contended min, and at sf1 would flag every query (ADVICE r11).
+    */
+  private def readRecord(p: Path, key: String,
+      sfDir: String): Map[String, Double] =
+    try {
+      val json = JsonMethods.parse(
+        new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+      json \ "sf" match {
+        case JString(sf) if sf == sfDir =>
+          json \ key match {
+            case JObject(fields) => fields.collect {
+              case (k, JDouble(v)) => k -> v
+              case (k, JInt(v)) => k -> v.toDouble
+            }.toMap
+            case _ =>
+              System.err.println(s"[bench] $p has no $key map")
+              Map.empty
+          }
+        case other =>
+          val sf = other match { case JString(s) => s; case _ => "?" }
+          System.err.println(s"[bench] $p was recorded at sf=$sf, run is " +
+            s"at $sfDir — its detector is off")
+          Map.empty
+      }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] cannot read $p: ${e.getMessage}")
+      Map.empty
+    }
+
+  /** Bench run order: a FIXED-SEED permutation of the name-sorted list.
+    * Purpose (VERDICT r17 #3, r19 #2): the recurring driver contention
+    * signature was a CONTIGUOUS alphabetical band of above-floor flags;
+    * under a shuffled order a load window covering a contiguous stretch of
+    * wall-clock flags a set that is NOT name-contiguous, so contention
+    * stops reading as a regression of one query family. Fixed seed
+    * (180001) so two runs are rep-for-rep comparable; deterministic given
+    * the name set (pinned in BenchSpec).
+    */
+  private[graft] def orderNames(names: Seq[String]): Seq[String] =
+    new scala.util.Random(180001L).shuffle(names.sorted)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // run with the engine's own optimizer rules active, as a user would
-    GraftOptimizations.install(spark)
-    // WindowExec warns `No Partition Defined` on the (deliberate) 10-row
-    // top-k rank window; at WARN it pollutes the driver-scraped stdout tail
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    // the between-rep unpersist of leftover localCheckpoint blocks (below)
-    // is deliberate — each rep builds fresh checkpoints, nothing recomputes
-    // the old ones — but RDD.unpersist WARNs about truncated lineage per
-    // block; keep the driver-scraped tail clean
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession.local()
     // warm the session (codegen cache, filesystem metadata) outside timing
     spark.read.parquet(s"$sfDir/nation.parquet").write
       .format("noop").mode("overwrite").save()
-    // the incremental-dedup query reads a store seeded OUTSIDE the query
-    // builder (construction is pure — VERDICT r2 #5)
     // Seed time is measured and reported (`seed_sec`, VERDICT r16 #5 —
     // the aggregate-creep audit): it is bench WALL, paid once before any
     // query timing, and the one block whose cost grows with the seam
@@ -211,36 +203,15 @@ object Bench {
     // per-seam attribution (VERDICT r17 #5: seed_sec varied 30.7→56.2→70
     // across boxes with no way to say WHICH seam) — one line per seam to
     // stderr + a seed_detail map in the detail record
-    val seedDetail = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def seedTimed(name: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime(); f
-      val dt = (System.nanoTime() - t0) / 1e9
-      seedDetail(name) = dt
+    val seedDetail = GraftSession.seedSeams(spark, sfDir)
+    seedDetail.foreach { case (name, dt) =>
       System.err.println(f"[bench] seed $name%-18s $dt%7.2f s")
     }
-    seedTimed("incremental_dedup")(
-      graft.ops.IncrementalDedup.seedQueryStore(spark, sfDir))
-    // materialize the co-purchase edge list once for the whole graph
-    // family (the production materialized-table analog — GraphEdges doc);
-    // parquet-backed, so the between-rep cache/checkpoint sweeps below
-    // never invalidate it
-    seedTimed("graph_edges")(graft.ops.GraphEdges.seed(spark, sfDir))
-    seedTimed("dedup_edges")(graft.ops.DedupEdges.seed(spark, sfDir))
-    seedTimed("sparse_index")(graft.ops.SparseIndex.seed(spark, sfDir))
-    seedTimed("hnsw_index")(graft.ops.HnswIndex.seed(spark, sfDir))
-    seedTimed("knn_lists")(graft.ops.KnnLists.seed(spark, sfDir))
     val seedSec = (System.nanoTime() - tSeed0) / 1e9
     System.err.println(f"[bench] seam seeding: $seedSec%.2f s")
-    // Run order (VERDICT r17 #3): sorted by default — the driver-
-    // comparable order every prior round used. SPARK_GRAFT_BENCH_ORDER=
-    // shuffled runs a FIXED-SEED Fisher–Yates permutation instead: if the
-    // driver's `above_floor` flag set stops being name-contiguous under a
-    // shuffled order, the "contiguous alphabetical load window" contention
-    // narrative (r10→r17) is confirmed as an environment property rather
-    // than a query property. Fixed seed so two shuffled runs are
-    // rep-for-rep comparable.
-    val names = orderNames(SparkEntry.queries.keySet.toSeq,
-      sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("shuffled"))
+    // Run order: the fixed-seed permutation (orderNames), so a contiguous
+    // load window on a shared box cannot flag a name-contiguous band
+    val names = orderNames(SparkEntry.queries.keySet.toSeq)
     val tRun0 = System.nanoTime()
     val results = names.map(n => n -> SparkEntry.queries(n)).map { case (name, fn) =>
       // a failing query must NOT report its elapsed-to-exception time — a
@@ -287,7 +258,7 @@ object Bench {
     //    absolute-slack term (r15 — VERDICT r14 #1) stops sub-second
     //    floors from flagging on driver-box noise ALONE: a 0.22 s floor
     //    read at 0.6 s is a 2.7× "regression" that is 0.4 s of scheduler
-    //    jitter, and every such flag cost a PerfProbe A/B ritual that
+    //    jitter, and every such flag cost a probe A/B ritual that
     //    returned "noise" four rounds running
     //    (scripts/bench_floors.json — the builder's quiet-box per-query
     //    record, reseeded each round close): min above the bar is either
@@ -298,36 +269,8 @@ object Bench {
     val ContentionRatio = 3.0
     val FloorRatio = 2.5
     val FloorSlackSec = 0.75
-    val floorsPath = sys.env.getOrElse(
-      "SPARK_GRAFT_BENCH_FLOORS", "scripts/bench_floors.json")
-    val floors: Map[String, Double] =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(floorsPath)),
-          java.nio.charset.StandardCharsets.UTF_8)
-        // floors are per-SF absolute seconds: applying sf0.1 floors at
-        // sf0.001 would trivially corroborate every contended min, and at
-        // sf1 would flag every query (ADVICE r11) — a floors file seeded
-        // at a different SF disables BOTH detectors for this run
-        val floorsSf = "\"sf\"\\s*:\\s*\"([^\"]+)\"".r
-          .findFirstMatchIn(txt).map(_.group(1))
-        if (!floorsSf.contains(sfDir)) {
-          System.err.println(
-            s"[bench] floors at $floorsPath were seeded at sf=${floorsSf.getOrElse("?")}, " +
-            s"run is at $sfDir — floor detectors disabled")
-          Map.empty[String, Double]
-        } else {
-          // floors live under "floors": flat string→number pairs; a full
-          // JSON parser is overkill for a file this code also writes
-          val body = txt.substring(txt.indexOf("\"floors\""))
-          "\"([A-Za-z0-9_]+)\"\\s*:\\s*([0-9.]+)".r
-            .findAllMatchIn(body)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] no floors at $floorsPath: ${e.getMessage}")
-        Map.empty
-      }
+    val floors = loadFloors(Paths.get(sys.env.getOrElse(
+      "SPARK_GRAFT_BENCH_FLOORS", "scripts/bench_floors.json")), sfDir)
     val stats = results.map { case (k, reps) =>
       if (reps.exists(_ < 0)) (k, -1.0, false, false)
       else {
@@ -401,9 +344,9 @@ object Bench {
     }
     val detailPath = sys.env.getOrElse(
       "SPARK_GRAFT_BENCH_DETAIL", "/tmp/bench_detail.json")
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(detailPath),
-      detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try Files.write(
+      Paths.get(detailPath),
+      detail.getBytes(StandardCharsets.UTF_8))
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $detailPath: ${e.getMessage}")
     }
@@ -413,9 +356,9 @@ object Bench {
     // `run / outputStrategy := StdoutOutput` keeps sbt from `[info]`-
     // decorating the line).
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/bench.json")
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(outPath),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try Files.write(
+      Paths.get(outPath),
+      json.getBytes(StandardCharsets.UTF_8))
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }

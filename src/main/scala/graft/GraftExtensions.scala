@@ -11,7 +11,7 @@ import graft.functions.{RefFunctions, VectorFunctions}
   * the DataFrame API — built-ins composed under a name, so SQL callers get
   * codegen/vectorization identically. No UDFs anywhere.
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions)...
+  *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   *   spark.sql("SELECT sanitize_sql(text) FROM docs")
   *
   * Also installable on a live session via [[GraftExtensions.register]].

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,16 +12,8 @@ object Verify {
     // exactly like a successful verification of the misspelled query
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // the engine's own optimizer rules are part of the verified surface
-    GraftOptimizations.install(spark)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // Guard (r18 — ADVICE r17): every knn/hnsw-family oracle embeds the
     // gate-pinned banding config, while the engine derives per-corpus;

@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions.col
   * cost stays visible in the bench through them).
   *
   * One parquet materialization at the shipped config (4×20 banding,
-  * top-K), seeded outside query construction (Bench/PerfProbe), temp
+  * top-K), seeded outside query construction (GraftSession.seedSeams:
+  * Bench, ExplainAudit, JobProbe, ScaleProbe), temp
   * storage reclaimed by [[clear]] / the JVM shutdown hook. Unseeded
   * sessions (Verify, tests, library callers) build inline, so the
   * correctness gate pins both paths (KnnListsSpec: seeded ≡ unseeded row

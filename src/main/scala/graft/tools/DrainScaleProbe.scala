@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1 scaling evidence for the five streaming maintainers' DRAIN paths
@@ -28,16 +28,7 @@ object DrainScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/sfprobe/sf1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftOptimizations.install(spark)
+    val spark = graft.GraftSession.local()
     require(new java.io.File(s"$sf1Dir/_DERIVED_OK").exists(),
       s"run graft.tools.ScaleProbe first to derive $sf1Dir")
 

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.config.SearchConfig
 import graft.io.{CsvFolderSink, CsvTable}
 import graft.ops.{ExportPipeline, ImportPipeline, SearchPipeline}
@@ -18,14 +17,7 @@ object EtlDemo {
   def main(args: Array[String]): Unit = {
     val root = Paths.get(args.headOption.getOrElse("/tmp/etl_demo"))
     deleteRecursively(root)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-etl-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     // ---- Excel→CSV export with the real xlsx DSv2 (FIXTURES.md B1/B2/B8) ----
     val excelIn = root.resolve("excel_in"); Files.createDirectories(excelIn)

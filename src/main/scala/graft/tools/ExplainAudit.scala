@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps the formatted physical plan of every SparkEntry query — the
   * .explain("formatted") review loop the 100 TB posture demands: check
   * PushedFilters/ReadSchema on scans, broadcast vs shuffle joins, and
@@ -13,24 +11,11 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val only = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     // the optimizer rules + seam materializations are part of what Bench
     // actually executes — explain the same plans the bench times, not the
     // unseeded inline fallbacks
-    graft.GraftOptimizations.install(spark)
-    graft.ops.IncrementalDedup.seedQueryStore(spark, dir)
-    graft.ops.GraphEdges.seed(spark, dir)
-    graft.ops.DedupEdges.seed(spark, dir)
-    graft.ops.SparseIndex.seed(spark, dir)
-    graft.ops.HnswIndex.seed(spark, dir)
-    graft.ops.KnnLists.seed(spark, dir)
+    val spark = graft.GraftSession.local()
+    graft.GraftSession.seedSeams(spark, dir)
     // one file per query when SPARK_GRAFT_EXPLAIN_DIR is set (the judge-
     // facing plans/rNN/ layout), else the r6 stdout stream
     val outDir = sys.env.get("SPARK_GRAFT_EXPLAIN_DIR")

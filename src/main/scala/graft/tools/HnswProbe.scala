@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only recall probe for the HNSW beam search: exact-top-k recall of
   * annHnswTopk at several (beamWidth, rounds) operating points.
   *
@@ -10,13 +8,7 @@ import org.apache.spark.sql.SparkSession
 object HnswProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     val exact = graft.ops.SimilarityOps.annCosineTopk(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     for ((e, b, r, d) <- Seq((6, 48, 3, 20))) {

@@ -2,40 +2,52 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 
 import scala.collection.mutable
 
 /** Dev-only empirical profiler (guide §1.1 — the "open the Spark UI,
-  * find the slowest stage" loop, headless): runs one query warm and
-  * prints every job and stage with wall time, task time, shuffle
-  * read/write bytes and rows, so the expensive stage is named instead of
-  * guessed. The eager localCheckpoints many operators mint at plan
-  * construction show up as their own jobs here — exactly the cost the
-  * final action's plan hides.
+  * find the slowest stage" loop, headless) over the session and seeded
+  * seams `Bench` runs on, so it measures the plan the bench times. For
+  * each named query it prints:
+  *   - the cold time, then `SPARK_GRAFT_PROBE_REPS` (default 3) warm reps
+  *     and their median — the A/B protocol BASELINE.md records verdict
+  *     numbers from (a cold dedup_minhash_lsh once measured 125 s vs 19 s
+  *     warm purely from interpreted-expression JIT warm-up);
+  *   - every job and the slowest stages of the last warm rep, with wall
+  *     time, task time, shuffle read/write bytes and rows, so the
+  *     expensive stage is named instead of guessed. The eager
+  *     localCheckpoints many operators mint at plan construction show up
+  *     as their own jobs here — exactly the cost the final action's plan
+  *     hides;
+  *   - `COUNT <query> <n>`: the shuffle exchanges ([[exchangeCount]]) of
+  *     the seeded query's physical plan (AQE initial plan), read once in
+  *     the last rep. It is the SEEDED plan, so it need not equal a
+  *     PlanLintSpec budget, which is measured on unseeded plans.
   *
   *   SPARK_GRAFT_CPUS=32 sbt 'runMain graft.tools.JobProbe /root/testdata/sf0.1 knn_delete_repair'
   */
 object JobProbe {
+
+  /** Shuffle exchanges in a physical plan's string form — anchored so the
+    * match can't land inside "BroadcastExchange"/"ReusedExchange" node
+    * names (broadcasts are cheap by design, reused exchanges don't
+    * re-execute). RoundRobinPartitioning IS counted: a stray
+    * repartition(n) is a full shuffle. Range exchanges count too.
+    */
+  def exchangeCount(plan: String): Int =
+    ("(?<![A-Za-z])Exchange " +
+      "(hashpartitioning|SinglePartition|RoundRobinPartitioning|" +
+      "rangepartitioning)").r.findAllIn(plan).size
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
     require(names.nonEmpty, "usage: JobProbe <sfDir> <query> [query ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftOptimizations.install(spark)
-    graft.ops.IncrementalDedup.seedQueryStore(spark, dir)
-    graft.ops.GraphEdges.seed(spark, dir)
-    graft.ops.DedupEdges.seed(spark, dir)
-    graft.ops.SparseIndex.seed(spark, dir)
-    graft.ops.HnswIndex.seed(spark, dir)
-    graft.ops.KnnLists.seed(spark, dir)
+    val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "3").toInt
+    require(reps >= 1, "SPARK_GRAFT_PROBE_REPS must be at least 1")
+    val spark = graft.GraftSession.local()
+    graft.GraftSession.seedSeams(spark, dir)
 
     case class JobRec(id: Int, var desc: String = "", var start: Long = 0,
       var end: Long = 0)
@@ -76,27 +88,37 @@ object JobProbe {
       }
     }
 
-    def sink(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
     names.foreach { n =>
       val fn = graft.SparkEntry.queries(n)
-      // warm-up (JIT + codegen), unprofiled
-      sink(fn(spark, dir))
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      // one timed execution, construction included (its eager checkpoints
+      // are part of the cost); returns the wall seconds. `planned` sees the
+      // query's DataFrame before the cache sweep below
+      def once(label: String)(planned: DataFrame => Unit = _ => ()): Double = {
+        val t0 = System.nanoTime()
+        spark.sparkContext.setJobDescription(n)
+        val df: DataFrame = fn(spark, dir)
+        df.write.format("noop").mode("overwrite").save()
+        val dt = (System.nanoTime() - t0) / 1e9
+        planned(df)
+        spark.catalog.clearCache()
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        println(f"[probe] $n%-34s $label%-8s $dt%8.2f s")
+        dt
+      }
+      once("cold")()
+      val warm = (1 until reps).map(i => once(s"warm $i")())
+      // the last warm rep is profiled
       jobs.clear(); stages.clear(); stageToJob.clear()
       spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      spark.sparkContext.setJobDescription(n)
-      sink(fn(spark, dir))
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      var exchanges = 0
+      val last = once(s"warm $reps") { df =>
+        exchanges = exchangeCount(df.queryExecution.executedPlan.toString) }
       // drain listener events before reading (the bus is async)
       Thread.sleep(500)
       spark.sparkContext.removeSparkListener(listener)
-      println(f"\n===== $n: total $dt%.2f s, ${jobs.size}%d jobs =====")
+      val med = graft.Bench.median(warm :+ last)
+      println(f"[probe] $n%-34s median-of-$reps%d warm: $med%8.2f s")
+      println(f"\n===== $n: last warm rep $last%.2f s, ${jobs.size}%d jobs =====")
       jobs.values.toSeq.sortBy(j => -(j.end - j.start)).take(12).foreach { j =>
         println(f"  job ${j.id}%3d ${(j.end - j.start) / 1e3}%7.2f s  ${j.desc.take(80)}")
       }
@@ -105,6 +127,7 @@ object JobProbe {
         println(f"  stage ${st.stageId}%4d job ${st.jobId}%3d wall ${st.wall}%6.2f task ${st.taskSec}%7.2f n ${st.nTasks}%3d " +
           f"inRows ${st.inRows}%9d shR ${st.shRead / 1024}%8d KiB shW ${st.shWrite / 1024}%8d KiB  ${st.name.take(60)}")
       }
+      println(s"COUNT $n $exchanges")
     }
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -9,11 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object LateDropProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     val dir = java.nio.file.Files.createTempDirectory("ldp")
     val base = 1700000000L - (1700000000L % 600L)
     def t(min: Long, sec: Long = 0): Long = base + min * 60 + sec

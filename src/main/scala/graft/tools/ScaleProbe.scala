@@ -32,7 +32,8 @@ object ScaleProbe {
   val Factor = 10
 
   /** Heaviest committed floors that read only documents/embeddings
-    * (the graph family needs lineitem, which the derived dir lacks).
+    * (the graph family and its graph_edges seam need lineitem, which the
+    * derived dir lacks, so that seam is left unseeded).
     */
   val DefaultNames = Seq(
     "knn_delete_repair", "incremental_knn", "knn_damage_stats",
@@ -83,28 +84,11 @@ object ScaleProbe {
       s"(${nDoc * Factor} docs, ${nVec * Factor} vecs)")
   }
 
-  private def seedAll(spark: SparkSession, dir: String): Unit = {
-    graft.ops.IncrementalDedup.seedQueryStore(spark, dir)
-    graft.ops.DedupEdges.seed(spark, dir)
-    graft.ops.SparseIndex.seed(spark, dir)
-    graft.ops.HnswIndex.seed(spark, dir)
-    graft.ops.KnnLists.seed(spark, dir)
-  }
-
   def main(args: Array[String]): Unit = {
     val names = if (args.nonEmpty) args.toSeq else DefaultNames
     val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/sfprobe/sf1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftOptimizations.install(spark)
+    val spark = graft.GraftSession.local()
     derive(spark, "/root/testdata/sf0.1", sf1Dir)
 
     def sink(df: DataFrame): Unit =
@@ -118,22 +102,21 @@ object ScaleProbe {
       .empty[(String, String), Double]
     dirs.foreach { case (label, dir) =>
       // seams cost ~190 s at sf1 — skippable when the probed queries
-      // touch none of them (e.g. the text/packing family)
+      // touch none of them (e.g. the text/packing family); graph_edges is
+      // never seeded, it reads lineitem and part, which the derived dir lacks
       if (!sys.env.contains("SPARK_GRAFT_SCALE_NOSEED")) {
         println(s"[scale] seeding seams at $label")
-        val tSeed = time(seedAll(spark, dir))
+        val tSeed = time(graft.GraftSession.seedSeams(spark, dir,
+          except = Set("graph_edges")))
         println(f"[scale] $label seeds $tSeed%8.2f s")
       }
       names.foreach { n =>
         val q = graft.SparkEntry.queries(n)
         val cold = time(sink(q(spark, dir)))
-        val warm = (1 to reps).map(_ => time(sink(q(spark, dir)))).sorted
         // true median — warm(size/2) at even reps is the MAX of the
         // middle pair, which would publish worst-of-two as the scaling
         // evidence (r16 review)
-        val med =
-          if (warm.size % 2 == 1) warm(warm.size / 2)
-          else (warm(warm.size / 2 - 1) + warm(warm.size / 2)) / 2
+        val med = graft.Bench.median((1 to reps).map(_ => time(sink(q(spark, dir)))))
         results((label, n)) = med
         println(f"[scale] $label%-7s $n%-26s cold $cold%7.2f  warm-med $med%7.2f s")
         spark.catalog.clearCache()

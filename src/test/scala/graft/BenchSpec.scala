@@ -6,22 +6,21 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The cross-round drift detector (`vs_prev_round`, VERDICT r15 #7):
   * pure-function pins, no Spark session — flagging rules, the two-term
-  * bar, and the prev-round record loader's sf guard.
+  * bar, the run order, and the prev-round and floors loaders' sf guards.
   */
 class BenchSpec extends AnyFunSuite {
 
-  test("orderNames: sorted by default, fixed-seed permutation when shuffled") {
+  test("orderNames: a fixed-seed permutation of the registry") {
     val names = Seq("c_q", "a_q", "b_q", "d_q", "e_q")
-    assert(Bench.orderNames(names, shuffled = false) == names.sorted)
-    val sh1 = Bench.orderNames(names, shuffled = true)
-    val sh2 = Bench.orderNames(names, shuffled = true)
-    assert(sh1 == sh2, "fixed seed: two shuffled runs must agree")
+    val sh1 = Bench.orderNames(names)
+    val sh2 = Bench.orderNames(names)
+    assert(sh1 == sh2, "fixed seed: two runs must agree")
     assert(sh1.sorted == names.sorted, "a permutation, nothing dropped")
     assert(sh1 != names.sorted, "actually shuffled at this size")
     // de-correlation property on the real registry: no long alphabetical
     // run survives the shuffle (a contiguous load window can no longer
     // flag a name-contiguous set)
-    val real = Bench.orderNames(SparkEntry.queries.keySet.toSeq, shuffled = true)
+    val real = Bench.orderNames(SparkEntry.queries.keySet.toSeq)
     val maxRun = real.sliding(2).count(p => p(0) <= p(1))
     assert(maxRun < real.size - 1, "not the sorted order")
   }
@@ -80,5 +79,33 @@ class BenchSpec extends AnyFunSuite {
     val prev = Bench.loadPrevRound("/root/testdata/sf0.1")
     assert(prev.size > 200, s"baseline too small: ${prev.size}")
     assert(prev.contains("q1_pricing_summary"))
+  }
+
+  private def floorsFile(sf: String): java.nio.file.Path = {
+    val f = Files.createTempFile("graft-bench-floors", ".json")
+    Files.write(f,
+      ("""{"_comment":"quiet-box record","source":"r19 close",""" +
+        s""""sf":"$sf","floors":{"_comment":"seconds",""" +
+        """"q1_agg":0.25,"knn_join":2,"failed_q":-1.0}}""").getBytes("UTF-8"))
+    f
+  }
+
+  test("loadFloors reads the floors map, skipping _comment keys and " +
+      "failed readings") {
+    val floors = Bench.loadFloors(floorsFile("/root/testdata/sf0.1"),
+      "/root/testdata/sf0.1")
+    assert(floors == Map("q1_agg" -> 0.25, "knn_join" -> 2.0))
+  }
+
+  test("loadFloors is empty for a file seeded at another sf") {
+    // per-SF absolute seconds: a floors file seeded at another sf must
+    // disable both detectors, not corroborate or flag every query
+    assert(Bench.loadFloors(floorsFile("/root/testdata/sf0.1"),
+      "/root/testdata/sf0.001").isEmpty)
+  }
+
+  test("loadFloors of a missing file is empty, never a crash") {
+    assert(Bench.loadFloors(java.nio.file.Paths.get("/nonexistent.json"),
+      "/root/testdata/sf0.1").isEmpty)
   }
 }
