@@ -126,7 +126,7 @@ object Bench {
     if (qs.size < 50) {
       // an empty map was already explained by readRecord
       if (qs.nonEmpty) System.err.println(s"[bench] drift baseline at $p " +
-        s"holds only ${qs.size} queries — shape mismatch, detector off")
+        s"holds only ${qs.size} queries: shape mismatch, detector off")
       Map.empty
     } else {
       System.err.println(s"[bench] drift baseline: $p (${qs.size} queries)")
@@ -168,7 +168,7 @@ object Bench {
         case other =>
           val sf = other match { case JString(s) => s; case _ => "?" }
           System.err.println(s"[bench] $p was recorded at sf=$sf, run is " +
-            s"at $sfDir — its detector is off")
+            s"at $sfDir; its detector is off")
           Map.empty
       }
     } catch { case e: Throwable =>

@@ -1,7 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan,
+  Project, Sort}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.slf4j.LoggerFactory
 
 /** Near-dup cluster formation — the missing last mile of dedup at scale
@@ -9,22 +12,40 @@ import org.slf4j.LoggerFactory
   * pipeline must decide which documents to DROP, which takes the connected
   * components of the pair graph and one kept representative per component.
   *
-  * The algorithm is Borůvka-style hook–compress–contract (the two-phase
-  * family of Kiveris et al., "Connected Components in MapReduce and
-  * Beyond", SoCC'14): each LEVEL hooks every node to the minimum of its
-  * closed neighborhood (ONE aggregation over the edge list), compresses
-  * the resulting pointer forest to its roots by pointer doubling (self-
-  * joins on the NODE-sized label table only — never the edge list), then
-  * contracts the edge list by root label and recurses on the contracted
-  * graph. Joins and aggregations only — no driver-side graph, no
-  * GraphFrames dependency.
+  * The algorithm runs in two parts.
+  *
+  * First, LOCAL CONTRACTION ([[localContract]], after Łącki, Mirrokni
+  * and Włodarczyk, "Connected Components at Scale via Local
+  * Contractions", arXiv 1807.10727): a union–find inside each partition
+  * rewrites the partition's edges to a star per local component, every
+  * node pointing at its local minimum. One pass rides the input
+  * partitioning with no shuffle; a second pass after ONE exchange keyed
+  * by node puts all of a node's local representatives in one partition
+  * and merges them. Both stars are node-sized: the edge list is read
+  * once, and its connectivity is kept exactly (every edge lies inside one
+  * local component, and every star edge inside one input component).
+  *
+  * Second, the LEVELS: Borůvka-style hook–compress–contract (the
+  * two-phase family of Kiveris et al., "Connected Components in
+  * MapReduce and Beyond", SoCC'14) over the symmetric star forest: each
+  * LEVEL hooks every node to the minimum of its closed neighborhood (ONE
+  * aggregation over the edge list), compresses the resulting pointer
+  * forest to its roots by pointer doubling (self-joins on the NODE-sized
+  * label table only), then contracts the edge list by root label and
+  * recurses on the contracted graph. The levels are the backstop: they
+  * reach component-minimum labels whatever the partitioning left for
+  * them. Joins, aggregations and the one local pass only — no
+  * driver-side graph, no GraphFrames dependency.
   *
   * Why this shape: near-dup graphs are unions of near-cliques, so the edge
   * list is quadratic in cluster size (809k edges over 2.8k nodes at sf0.1)
   * while the node set stays tiny. Hash-to-min iterations pay the full edge
-  * list EVERY round (6 rounds here); hook–compress–contract pays it once
-  * per level, and level 1 collapses every near-clique to a single node —
-  * the measured contracted graph at sf0.1 is empty after one level.
+  * list EVERY round (6 rounds here); hook–compress–contract alone pays it
+  * once per level and still runs counting jobs per compress round and per
+  * level. The local pass does the bulk of the merging inside tasks, so
+  * the levels start from a graph whose components are already nearly
+  * stars: one level and one compress round on `semdedup_knn`'s sf0.1
+  * input, whose construction runs 12 Spark jobs (58-59 before).
   * Termination: in any component that still has an edge (u,v) with u < v,
   * v's closed-neighborhood min is < v, so v is not a root — every level
   * strictly shrinks every multi-node component (singleton hook trees can
@@ -54,21 +75,103 @@ object ClusterOps {
     * the component-minimum node id. Iterative — CONSTRUCTION RUNS THE
     * PROPAGATION JOBS (the returned frame is the converged, materialized
     * result; no filesystem writes, safe to explain).
+    *
+    * Traffic before level 1: the local pass over the edge list in place,
+    * ONE exchange of its node-sized star (at most Σ per-partition node
+    * counts rows) keyed by node, and a second local pass that merges each
+    * node's local representatives. The levels then run over that star
+    * forest, made symmetric, instead of over the edge list. Ids are cast
+    * to long for the pass and back to the input's id type on output.
     */
   def connectedComponents(edges: DataFrame, maxRounds: Int = 25): DataFrame = {
-    val e = edges.select(
+    val e = unsorted(edges).select(
       col(edges.columns(0)).as("src"), col(edges.columns(1)).as("dst"))
-    // materialize the edge query ONCE — the level loop reads sym twice
-    // (hook + contract), and an un-checkpointed frame would recompute the
-    // upstream dedup per read. NO distinct here: duplicate/reversed input
-    // edges are absorbed anyway (hook is a min-aggregation, contract runs
-    // its own distinct), so deduping up front would pay a full exchange
-    // over the edge list just to guard caller dirt — the union is narrow
-    // and the checkpoint shuffle-free (ClusterOpsSpec pins the dup/reversed
-    // edge cases).
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+    // the id type the output has always had: the union of both edge
+    // directions widens mismatched endpoint types (analysis only, no job)
+    val idType = e.union(e.select(col("dst"), col("src"))).schema.head.dataType
+    val whole = e.filter(col("src").isNotNull && col("dst").isNotNull)
+    val star1 = localContract(whole)
+    val star2 = localContract(star1.repartition(col("src")))
+    // an edge with a null endpoint is no edge between two nodes: it goes
+    // around the local pass unchanged (the typed pass has no null) and
+    // the levels give its rows the labels they always had
+    val loose = e.filter(col("src").isNull || col("dst").isNull)
+      .select(col("src").cast("long"), col("dst").cast("long"))
+    // both directions from ONE read of each row: star2 is not reread, so
+    // sym is symmetric even where a re-run would chunk differently.
+    // Materialized ONCE — the level loop reads sym twice (hook +
+    // contract). No distinct: hook is a min-aggregation and contract runs
+    // its own distinct
+    val sym = star2.union(loose)
+      .select(explode(array(
+        struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint()
     ccLevel(sym, level = 1, maxRounds)
+      .select(col("id").cast(idType).as("id"), col("rep").cast(idType).as("rep"))
+  }
+
+  /** `df` without the global sorts on top of its plan. Components are a
+    * function of the edge SET, and a caller's sort (KnnLists re-applies
+    * one on every read of its artifact) would cost a sampling job and a
+    * range exchange per read for an order nothing looks at. Only sorts
+    * reached through deterministic projections and filters go; a sort
+    * under a limit stays, since it picks the rows.
+    */
+  private def unsorted(df: DataFrame): DataFrame = {
+    def strip(p: LogicalPlan): LogicalPlan = p match {
+      case s: Sort if s.global => strip(s.child)
+      case pr: Project if pr.projectList.forall(_.deterministic) =>
+        pr.withNewChildren(Seq(strip(pr.child)))
+      case f: Filter if f.condition.deterministic =>
+        f.withNewChildren(Seq(strip(f.child)))
+      case other => other
+    }
+    val plan = DatasetBridge.analyzedPlan(df)
+    val bare = strip(plan)
+    if (bare eq plan) df else DatasetBridge.ofRows(df.sparkSession, bare)
+  }
+
+  /** Most union–find entries one partition holds before it emits its star
+    * and starts over: 2^20 nodes, at most ~36 MB of table per task. Any
+    * chunking keeps connectivity, so the cap bounds memory, never changes
+    * a result.
+    */
+  private val LocalContractCap = 1 << 20
+
+  /** The local contraction pass: per partition, a union–find over the
+    * `(Long, Long)` edges (first two columns of `edges`, no null endpoint)
+    * emits `(v, localMin(v))` for every node it saw, roots as self-pairs —
+    * a star forest with rep ≤ id, the precondition of [[compress]].
+    * Narrow: it rides the input partitioning. Output columns (src, dst).
+    */
+  def localContract(edges: DataFrame): DataFrame = {
+    import edges.sparkSession.implicits._
+    edges.select(col(edges.columns(0)).cast("long"),
+        col(edges.columns(1)).cast("long"))
+      .as[(Long, Long)]
+      .mapPartitions(contractPartition(_, LocalContractCap))
+      .toDF("src", "dst")
+  }
+
+  /** One partition of [[localContract]]: union by smaller root, so a root
+    * is its set's minimum, with path halving. When the next edge could
+    * take the table past `cap` entries the star so far is emitted and the
+    * table starts empty (a node may then appear in several chunks, each
+    * with a rep of its own chunk — still rep ≤ id).
+    */
+  private[graft] def contractPartition(edges: Iterator[(Long, Long)],
+      cap: Int): Iterator[(Long, Long)] = {
+    require(cap >= 2, s"local contraction cap must hold an edge, got $cap")
+    val uf = new LongUnionFind
+    Iterator.continually {
+      while (edges.hasNext && uf.size + 2 <= cap) {
+        val (a, b) = edges.next()
+        uf.union(a, b)
+      }
+      uf.drain()
+    }.takeWhile(_.hasNext).flatten
   }
 
   /** One hook–compress–contract level over a symmetric, checkpointed edge
@@ -493,4 +596,80 @@ object ClusterOps {
     "dedup_clusters" -> dedupClustersOracle,
     "dedup_clusters_lsh" -> dedupClustersLshOracle,
     "delete_propagation" -> deletePropagationOracle)
+}
+
+/** Union–find over long node ids for [[ClusterOps.localContract]]: parent
+  * pointers in a primitive open-addressing long→long table (linear
+  * probing, load ≤ 1/2, grown by doubling), so a partition's nodes cost
+  * 17 bytes a slot and no boxing. A root is always its set's minimum.
+  */
+private final class LongUnionFind {
+  private var keys = new Array[Long](1024)
+  private var parent = new Array[Long](1024)
+  private var used = new Array[Boolean](1024)
+  private var n = 0
+
+  def size: Int = n
+
+  // Fibonacci hashing: the top bits of k·φ spread sequential ids
+  private def slot(k: Long): Int = {
+    val mask = keys.length - 1
+    var i = ((k * 0x9E3779B97F4A7C15L) >>> 32).toInt & mask
+    while (used(i) && keys(i) != k) i = (i + 1) & mask
+    i
+  }
+
+  private def add(k: Long): Unit = {
+    if (2 * (n + 1) > keys.length) grow()
+    val i = slot(k)
+    if (!used(i)) { used(i) = true; keys(i) = k; parent(i) = k; n += 1 }
+  }
+
+  private def grow(): Unit = {
+    val (oldKeys, oldParent, oldUsed) = (keys, parent, used)
+    keys = new Array[Long](oldKeys.length * 2)
+    parent = new Array[Long](oldKeys.length * 2)
+    used = new Array[Boolean](oldKeys.length * 2)
+    var i = 0
+    while (i < oldKeys.length) {
+      if (oldUsed(i)) {
+        val j = slot(oldKeys(i))
+        used(j) = true; keys(j) = oldKeys(i); parent(j) = oldParent(i)
+      }
+      i += 1
+    }
+  }
+
+  /** Root of `k` (present), halving the path on the way. */
+  private def find(k: Long): Long = {
+    var i = slot(k)
+    while (parent(i) != keys(i)) {
+      val grand = parent(slot(parent(i)))
+      parent(i) = grand
+      i = slot(grand)
+    }
+    keys(i)
+  }
+
+  def union(a: Long, b: Long): Unit = {
+    add(a); add(b)
+    val (ra, rb) = (find(a), find(b))
+    if (ra < rb) parent(slot(rb)) = ra
+    else if (rb < ra) parent(slot(ra)) = rb
+  }
+
+  /** Every node with its root, then an empty table (capacity kept). */
+  def drain(): Iterator[(Long, Long)] = {
+    val ids = new Array[Long](n)
+    val reps = new Array[Long](n)
+    var i = 0
+    var j = 0
+    while (i < keys.length) {
+      if (used(i)) { ids(j) = keys(i); reps(j) = find(keys(i)); j += 1 }
+      i += 1
+    }
+    java.util.Arrays.fill(used, false)
+    n = 0
+    Iterator.range(0, ids.length).map(k => (ids(k), reps(k)))
+  }
 }

@@ -281,11 +281,11 @@ class PlanLintSpec extends AnyFunSuite {
       "multimodal_meta" -> 1,     // narrow map, sort only
       // heaviest-query shapes pinned (VERDICT r4 polish): a refactor that
       // adds an exchange to either should fail loudly, not ship quietly
-      "pagerank_step" -> 6,       // = pagerankIterate(rounds=1): edge/
+      "pagerank_step" -> 0,       // = pagerankIterate(rounds=1): edge/
                                   // outdeg/rank frames localCheckpoint at
-                                  // construction so the planned tail is
-                                  // small; 6 is a safe upper bound.
-                                  // top-20 is TakeOrdered, no sort
+                                  // construction, so the planned tail
+                                  // has no exchange at all; top-20 is
+                                  // TakeOrdered, no sort
                                   // exchange
       "dedup_editdistance" -> 2,  // prefix-block join broadcasts; one
                                   // survivor-set boundary exchange (+sort)
@@ -356,10 +356,11 @@ class PlanLintSpec extends AnyFunSuite {
                                   // source-table window (SinglePartition
                                   // over ≤|sources| rows) + 1-row total
                                   // and level aggs (+sort)
-      "delete_propagation" -> 7,  // two CC label tables (propagation jobs
+      "delete_propagation" -> 3,  // two CC label tables (propagation jobs
                                   // ran at construction behind
-                                  // localCheckpoints) + the audit joins
-                                  // (+sort)
+                                  // localCheckpoints; one level each, so
+                                  // no label-compose joins) + the audit
+                                  // join (+sort)
       "model_calibration" -> 14,  // a chain of keyless 1-row aggregates
                                   // (GD steps, μ/σ, ECE) + the ≤10-row bin
                                   // agg — every exchange carries ≤32
@@ -378,11 +379,11 @@ class PlanLintSpec extends AnyFunSuite {
       "ann_truncated_recall" -> 7, // two per-query top-K windows + overlap
                                   // semi-join + per-query agg (+sort);
                                   // both rankings ride one broadcast pass
-      "quality_ablation" -> 8,    // the corpus_curation flag joins + ONE
+      "quality_ablation" -> 6,    // the corpus_curation flag joins + ONE
                                   // 15-column aggregate melted to 5 rows
                                   // (the five-way union form re-derived
                                   // the pipeline per rule: 35 exchanges)
-      "dedup_lsh_tune" -> 14,     // 3 configs × (band join + pair
+      "dedup_lsh_tune" -> 9,      // 3 configs × (band join + pair
                                   // distinct) off ONE signature pass +
                                   // per-config agg + union-truth distinct
                                   // + 1-row denominator (+sort) — a
@@ -448,7 +449,7 @@ class PlanLintSpec extends AnyFunSuite {
       "degree_assortativity" -> 9, // edge build + degree agg + two
                                   // node-keyed attaches + 1-row corr agg —
                                   // no sort (1 row)
-      "minhash_estimate_error" -> 8, // checkpointed signature table;
+      "minhash_estimate_error" -> 5, // checkpointed signature table;
                                   // banded candidate join + distinct +
                                   // sig/shingle attaches + bucket agg
                                   // (+sort)
@@ -463,10 +464,10 @@ class PlanLintSpec extends AnyFunSuite {
                                   // path; output is probe-set-sized
       "model_eval_by_slice" -> 4, // two 1-row GD aggregates + ONE
                                   // per-source val aggregate (+sort)
-      "dedup_keep_best" -> 5,     // CC label table (propagation behind
+      "dedup_keep_best" -> 3,     // CC label table (propagation behind
                                   // checkpoints) + token join + per-cluster
                                   // argmax window (+sort)
-      "ann_filtered_topk" -> 10,  // three per-query windows + survivor/
+      "ann_filtered_topk" -> 8,   // three per-query windows + survivor/
                                   // hit aggs over the checkpointed scored
                                   // frame (+sort) — windows past the first
                                   // touch <=20 rows per query
@@ -507,7 +508,7 @@ class PlanLintSpec extends AnyFunSuite {
       "mmr_rerank_ann" -> 2,      // beam feeds ONE bounded per-query MMR
                                   // aggregate (+sort); adjacency reads
                                   // ride the HnswIndex seam
-      "incremental_labels" -> 3,  // star contraction + maintained closure
+      "incremental_labels" -> 1,  // star contraction + maintained closure
                                   // over seam-filtered eras (propagation
                                   // behind checkpoints) (+sort)
       "dedup_minhash_shingle" -> 2, // signature agg + banded pair
@@ -560,15 +561,16 @@ class PlanLintSpec extends AnyFunSuite {
                                   // banding, node merge) + keep anti-join
                                   // (+sort) — build AND repair run by
                                   // design
-      "semdedup_knn" -> 5,        // the knn artifact build (banded
-                                  // top-K kernel) + the CC
-                                  // closure's planned tail (propagation
-                                  // behind checkpoints) (+sort)
-      "dsir_weights" -> 8,        // doc×bucket agg + B-row dist agg +
+      "semdedup_knn" -> 1,        // the knn artifact build (banded
+                                  // top-K kernel) and the CC closure
+                                  // both run at construction behind its
+                                  // checkpoints; the planned tail is the
+                                  // sort
+      "dsir_weights" -> 7,        // doc×bucket agg + B-row dist agg +
                                   // 1-row totals + per-doc score agg
                                   // (+sort); the bag agg plans per
                                   // consumer pre-AQE, reuse collapses it
-      "dsir_resample" -> 7,       // the weights chain; orderBy+limit is
+      "dsir_resample" -> 6,       // the weights chain; orderBy+limit is
                                   // TakeOrderedAndProject (no range
                                   // exchange)
       "dsir_drift" -> 6,          // ONE era-conditional bucket agg +
@@ -580,19 +582,19 @@ class PlanLintSpec extends AnyFunSuite {
                                   // repartitions (r18; the kernel's
                                   // bucket exchange rides them) + top-1
                                   // node merge + eval left join (+sort)
-      "soft_dedup" -> 9,          // cluster-size agg + doc joins (+sort)
+      "soft_dedup" -> 5,          // cluster-size agg + doc joins (+sort)
                                   // over the label artifact's planned
                                   // tail (unseeded; seam removes it)
       "cluster_quota_sample" -> 2, // ONE label-partitioned rank window
                                   // (+sort)
       "curriculum_phases" -> 12,   // cutpoint agg + phase agg + 1-row
                                   // total (+sort); partials pre-AQE
-      "filter_agreement" -> 58,   // gopher + dsir + perplexity chains +
+      "filter_agreement" -> 23,   // gopher + dsir + perplexity chains +
                                   // the label artifact's inline closure
                                   // tail (unseeded plan-time bound; the
                                   // seam serves labels from parquet in
                                   // bench; r16 adds the ppl_tail leg)
-      "perplexity_filter" -> 16,  // doc-bag agg + bigram-model agg
+      "perplexity_filter" -> 14,  // doc-bag agg + bigram-model agg
                                   // (+ its unigram re-agg) + per-doc
                                   // score agg + 1-row cutpoint agg
                                   // (+sort); the bag agg plans per
