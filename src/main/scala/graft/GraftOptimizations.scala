@@ -97,6 +97,9 @@ object LevenshteinPrefilter extends Rule[LogicalPlan] {
 }
 
 object GraftOptimizations {
+  /** The AQE coalescing floor [[install]] sets (see there). */
+  private val MinPartitionSize = "16k"
+
   val rules: Seq[Rule[LogicalPlan]] = Seq(IntersectSizeRewrite, LevenshteinPrefilter)
   def install(spark: SparkSession): Unit = {
     rules.foreach { r =>
@@ -118,14 +121,12 @@ object GraftOptimizations {
     // and the heaviest stage of the knn/hnsw family runs on one core
     // (measured: knn_delete_repair 6.1 s → 2.8 s at a 16 KB floor on
     // local[32]). At cluster scale real shuffles dwarf the floor and the
-    // setting never binds, so it is safe to default low; honored only
-    // when the user has not set it themselves, overridable via
-    // SPARK_GRAFT_MIN_PARTITION_SIZE.
+    // setting never binds, so it is safe to default low; applied only
+    // when the user has not set it in their SparkConf.
     val mpsKey = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     // RuntimeConfig.getOption surfaces the BUILT-IN default for SQL confs,
     // so "user set it" is detectable only from the startup SparkConf
     if (!spark.sparkContext.getConf.contains(mpsKey))
-      spark.conf.set(mpsKey,
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "16k"))
+      spark.conf.set(mpsKey, MinPartitionSize)
   }
 }

@@ -46,7 +46,7 @@ case class ArrayIntersectSize(left: Expression, right: Expression)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val et = ctx.addReferenceObj("elemType", elementType)
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"${ev.value} = graft.functions.expressions.ArrayIntersectSize.count($a, $b, $et);"
+      s"${ev.value} = graft.functions.expressions.ArrayIntersectSize$$.MODULE$$.count($a, $b, $et);"
     })
   }
 

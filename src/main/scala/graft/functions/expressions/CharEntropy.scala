@@ -41,7 +41,7 @@ case class CharEntropy(child: Expression) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, s =>
-      s"graft.functions.expressions.CharEntropy.compute($s)")
+      s"graft.functions.expressions.CharEntropy$$.MODULE$$.compute($s)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

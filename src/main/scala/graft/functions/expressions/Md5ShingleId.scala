@@ -41,7 +41,7 @@ case class Md5ShingleId(child: Expression, k: Int) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, arr => {
       s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.expressions.Md5ShingleId.ids($arr, $k));
+         |  graft.functions.expressions.Md5ShingleId$$.MODULE$$.ids($arr, $k));
        """.stripMargin
     })
 

@@ -41,7 +41,7 @@ case class MinHashSignature(child: Expression, nHashes: Int)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, arr => {
       s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.expressions.MinHashSignature.signature($arr, $nHashes));
+         |  graft.functions.expressions.MinHashSignature$$.MODULE$$.signature($arr, $nHashes));
        """.stripMargin
     })
 
@@ -83,7 +83,7 @@ case class AffineMinHash(child: Expression, nHashes: Int)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, arr => {
       s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.expressions.AffineMinHash.signature($arr, $nHashes));
+         |  graft.functions.expressions.AffineMinHash$$.MODULE$$.signature($arr, $nHashes));
        """.stripMargin
     })
 

@@ -40,7 +40,7 @@ case class RollingShingleHash(child: Expression, k: Int, base: Long = 1000003L)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, arr => {
       s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.expressions.RollingShingleHash.hashes($arr, $k, ${base}L));
+         |  graft.functions.expressions.RollingShingleHash$$.MODULE$$.hashes($arr, $k, ${base}L));
        """.stripMargin
     })
 

@@ -58,7 +58,7 @@ case class SignLshBuckets(child: Expression, bitsPerBand: Int, bands: Int)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, arr => {
       s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.expressions.SignLshBuckets.buckets($arr, $bitsPerBand, $bands));
+         |  graft.functions.expressions.SignLshBuckets$$.MODULE$$.buckets($arr, $bitsPerBand, $bands));
        """.stripMargin
     })
 

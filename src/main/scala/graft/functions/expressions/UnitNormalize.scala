@@ -43,7 +43,7 @@ case class UnitNormalize(child: Expression) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, arr => {
-      s"""${ev.value} = graft.functions.expressions.UnitNormalize.normalize($arr);
+      s"""${ev.value} = graft.functions.expressions.UnitNormalize$$.MODULE$$.normalize($arr);
        """.stripMargin
     })
 

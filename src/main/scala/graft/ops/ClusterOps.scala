@@ -180,8 +180,14 @@ object ClusterOps {
   private def ccLevel(sym: DataFrame, level: Int, maxRounds: Int): DataFrame = {
     require(level <= maxRounds,
       s"connected components did not converge in $maxRounds levels")
-    // hook is NOT checkpointed: compress round 1 self-joins it, and both
-    // sides share the groupBy exchange (reuse), so it computes once anyway
+    // hook is NOT checkpointed: compress round 1 self-joins it. Over a
+    // non-nullable edge list both sides share the groupBy exchange
+    // (reuse), so it computes once. Over a nullable one (any parquet-read
+    // edge list) it computes twice: the jump join infers `isnotnull(rid)`
+    // on the lookup side only and pushes it below the groupBy, so the two
+    // exchange subtrees differ. A null-safe join key avoids the filter but
+    // moves the lookup side off the groupBy's partitioning, which costs an
+    // exchange and a job more (measured on ClusterOpsSpec's budget graph)
     val roots = compress(hook(sym), maxRounds)
     if (log.isDebugEnabled)
       log.debug(s"[cc] level $level compressed t=${System.nanoTime() / 1e9}")

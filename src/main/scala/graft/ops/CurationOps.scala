@@ -1459,14 +1459,9 @@ object CurationOps {
     * and average identical values.
     */
   def domainReweight(s: SparkSession, dir: String): DataFrame = {
-    val toks = Tables(s, dir, "documents")
-      // spread BEFORE the posexplode: toks feeds THREE subtrees (bigrams,
-      // unigram counts, vocab), each re-running tokenization — on the
-      // one-partition scan all three passes ran single-task (r19
-      // JobProbe: 0.88/0.83/0.3/0.3 s n=1 stages). The doc_id key is the
-      // lead window's partition key, so the bigram branch reuses the
-      // exchange.
-      .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
+    // doc_id is the lead window's partition key, so the bigram branch
+    // rides this exchange
+    val toks = Tables.spread(Tables(s, dir, "documents"), col("doc_id"))
       .select(col("doc_id"), col("source"),
         posexplode(split(DedupOps.normText(col("text")), " "))
           .as(Seq("pos", "w")))
@@ -1643,15 +1638,8 @@ object CurationOps {
     * exactly this table.
     */
   private[graft] def dsirBucketsFor(docs: DataFrame): DataFrame =
-    docs
-      // spread BEFORE the tokenize/explode projection: the corpus arrives
-      // as a single-file one-partition scan, so the whole token stream
-      // (and the map-side partial of the bag aggregate) would run on one
-      // core (r19 JobProbe: dsir_weights' 0.57 s n=1 stage; the r18
-      // duplicateSpans lesson). Streaming micro-batches pay one tiny
-      // extra exchange; the doc_id key matches the bag aggregate's key.
-      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-        col("doc_id"))
+    // doc_id is the bag aggregate's key
+    Tables.spread(docs, col("doc_id"))
       .select(col("doc_id"), col("lang"),
         explode(split(DedupOps.normText(col("text")), " ")).as("w"))
       // split('') yields [''] — without this an empty/whitespace-only
@@ -2148,12 +2136,7 @@ object CurationOps {
     * [[graft.streaming.StreamingPpl]] appends exactly this table.
     */
   private[graft] def pplBagsFor(docs: DataFrame): DataFrame =
-    docs
-      // spread BEFORE tokenize + bigram explode (single-file scan = one
-      // partition; r19 JobProbe: perplexity_filter ran THREE n=1 passes
-      // of 0.5-1.1 s each — the dsirBucketsFor note)
-      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-        col("doc_id"))
+    Tables.spread(docs, col("doc_id"))
       .select(col("doc_id"), col("lang"),
         split(DedupOps.normText(col("text")), " ").as("ts"))
       .filter(size(col("ts")) >= 2)

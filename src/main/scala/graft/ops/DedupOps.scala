@@ -168,11 +168,9 @@ object DedupOps {
     * exact-Jaccard pair build starts from.
     */
   private[graft] def tokenizedDocs(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "documents")
-      // spread BEFORE tokenizing (single-file scan = one partition; the
-      // duplicateSpans note) — downstream the pair build checkpoints this
-      // frame, so the partitioning carries to every consumer
-      .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
+    // the pair build checkpoints this frame, so its partitioning carries
+    // to every consumer
+    Tables.spread(Tables(s, dir, "documents"), col("doc_id"))
       .select(col("doc_id"), col("source"),
         array_distinct(split(normText(col("text")), " ")).as("tokens"))
       .withColumn("n_tok", size(col("tokens")))
@@ -200,9 +198,9 @@ object DedupOps {
       // count, the prefix build, and both verify attach sides — exchange
       // reuse covers only the prefix self-join, so the regexp+split+
       // array_distinct chain re-ran in the ta/tb broadcast builds too
-      // (4 evaluations/doc). tokenizedDocs repartitions before
-      // tokenizing, so the checkpoint materializes in parallel and every
-      // consumer inherits the spread. Unlike .cache() it frees with the
+      // (4 evaluations/doc). tokenizedDocs spreads before tokenizing,
+      // so the checkpoint materializes in parallel and every consumer
+      // inherits the spread. Unlike .cache() it frees with the
       // RDD sweep every session already runs (VERDICT r2)
       .localCheckpoint()
     val tokDoc = docs.select(col("doc_id"), col("source"), col("n_tok"),
@@ -899,15 +897,10 @@ object DedupOps {
   def dedupContainmentFrom(documents: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column => bc, expression => be}
     import graft.functions.expressions.Md5ShingleId
-    val docs = documents
-      // spread BEFORE the tokenize + md5-shingle projection (single-file
-      // scan = one partition; the duplicateSpans note) and checkpoint:
-      // the shingle table feeds SIX subtrees (sizes, df, prefix, candidate
-      // posting side, two verify sides) — uncheckpointed, the digest pass
-      // re-ran single-task per subtree (r19 JobProbe: seven sequential
-      // n=1 stages of 0.4-0.9 s each)
-      .repartition(documents.sparkSession.sessionState.conf
-        .numShufflePartitions, col("doc_id"))
+    // checkpointed: the shingle table feeds six subtrees (sizes, df,
+    // prefix, candidate posting side, two verify sides), and without it
+    // the digest pass re-ran per subtree
+    val docs = Tables.spread(documents, col("doc_id"))
       .select(col("doc_id"), split(normText(col("text")), " ").as("tokens"))
       .filter(size(col("tokens")) >= 5)
       .select(col("doc_id"),
@@ -1226,12 +1219,7 @@ object DedupOps {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column => bc, expression => be}
     val K = 20
-    val docs = Tables(s, dir, "documents")
-      // spread BEFORE the per-char hash projection: the single-file scan
-      // is one partition, so the rolling-hash pass (and everything
-      // downstream of the checkpoint) would otherwise run on one core
-      // (r18 JobProbe — the hnswBanded lesson)
-      .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
+    val docs = Tables.spread(Tables(s, dir, "documents"), col("doc_id"))
       .select(col("doc_id"), normText(col("text")).as("norm"))
       .select(col("doc_id"), length(col("norm")).as("n_chars"),
         bc(graft.functions.expressions.RollingShingleHash(
@@ -1594,10 +1582,7 @@ object DedupOps {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column => bc, expression => be}
     import graft.functions.expressions.{AffineMinHash, Md5ShingleId}
     val nHashes = 48; val bands = 8; val rowsPerBand = 6
-    val docs = Tables(s, dir, "documents")
-      // spread BEFORE the shingle/minhash projections (single-file scan =
-      // one partition; the duplicateSpans note)
-      .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
+    val docs = Tables.spread(Tables(s, dir, "documents"), col("doc_id"))
       .select(col("doc_id"), split(normText(col("text")), " ").as("tokens"))
       .filter(size(col("tokens")) >= 5)
       .select(col("doc_id"),
@@ -1972,11 +1957,7 @@ object DedupOps {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column => bc, expression => be}
     val K = 20
-    val docs = documents
-      // spread BEFORE the per-char hash projection (single-file scan =
-      // one partition; the duplicateSpans note)
-      .repartition(documents.sparkSession.sessionState.conf
-        .numShufflePartitions, col("doc_id"))
+    val docs = Tables.spread(documents, col("doc_id"))
       .select(col("doc_id"), normText(col("text")).as("norm"))
       .select(col("doc_id"), col("norm"), length(col("norm")).as("n_chars"),
         bc(graft.functions.expressions.RollingShingleHash(

@@ -861,12 +861,7 @@ object ModelOps {
     val isTrain = (instr(lit("0123456789abcdef"),
       substring(md5(col("doc_id").cast("string").cast("binary")), 32, 1))
       - 1) < 13
-    val toks = Tables(s, dir, "documents")
-      // spread BEFORE tokenize/explode: the map-side partial of the
-      // docTok aggregate otherwise runs on the one-partition scan (r19
-      // JobProbe: a 1.1 s n=1 stage fronting the whole NB pipeline; the
-      // DedupOps duplicateSpans lesson)
-      .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
+    val toks = Tables.spread(Tables(s, dir, "documents"), col("doc_id"))
       .select(col("doc_id"), col("source"), isTrain.as("is_train"),
         explode(split(DedupOps.normText(col("text")), " ")).as("w"))
       .filter(length(col("w")) > 0)

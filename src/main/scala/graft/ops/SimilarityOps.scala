@@ -60,7 +60,7 @@ object SimilarityOps {
     * oracle SQL interpolating the constant stays value-exact while any
     * larger corpus gets the scaled config automatically
     * (BandingDefaultSpec pins the equality at the gate sizes and the
-    * =7 value at the 20k-vector probe size BandScaleProbe measured).
+    * =7 value at the 20k-vector probe size `ScaleProbe band` measured).
     * Recall lost to finer buckets is bought back with BANDS (linear),
     * never occupancy (quadratic) — [[bandsFor]].
     */
@@ -84,7 +84,7 @@ object SimilarityOps {
 
   /** Band count paired with [[bitsFor]]: the shipped [[KnnBands]] at the
     * gate config, DOUBLED PER 3 BITS above the floor. The measured
-    * anchor (BASELINE.md r17 — BandScaleProbe, 20k vectors): +3 bits at
+    * anchor (BASELINE.md r17 — `ScaleProbe band`, 20k vectors): +3 bits at
     * fixed bands drops recall@5 vs exact 0.981 → 0.619, and one
     * doubling buys it back to 0.850 — consistent with the sign-LSH
     * collision model (per-band collision p = (1−θ/π)^bits falls ≈ 2×
@@ -3074,12 +3074,10 @@ object SimilarityOps {
     * corpus and ≤ label-count rows respectively.
     */
   def annHubness(s: SparkSession, dir: String): DataFrame = {
-    // spread the one-partition embeddings scan before the label-block
-    // self-join: the broadcast join preserves the stream side's layout,
-    // so the whole |label-block|² dot-product pass ran single-task (r19
-    // JobProbe: a 1.0 s n=1 stage; the duplicateSpans lesson)
-    val emb = embeddings(s, dir)
-      .repartition(s.sessionState.conf.numShufflePartitions, col("vec_id"))
+    // spread before the label-block self-join: the broadcast join keeps
+    // the stream side's layout, so the |label-block|² dot-product pass
+    // runs with as many tasks as this frame has partitions
+    val emb = Tables.spread(embeddings(s, dir), col("vec_id"))
     val a = emb.select(col("vec_id").as("qid"), col("label"), col("v").as("qv"))
     val b = emb.select(col("vec_id").as("nid"), col("label"), col("v").as("nv"))
     val scored = a.join(b, Seq("label")).filter(col("qid") =!= col("nid"))
@@ -3946,7 +3944,7 @@ object SimilarityOps {
   private[graft] val RecallSampleMod = 13
 
   /** Recall audit of the kNN-lists artifact vs brute-force EXACT ground
-    * truth (r17 — the number BandScaleProbe measures offline, made an
+    * truth (r17 — the number `ScaleProbe band` measures offline, made an
     * always-available oracle-backed query: a production deployment
     * alarms on recall, so recall must be a QUERY, not a dev probe): on
     * the deterministic 1-in-[[RecallSampleMod]] node sample, the exact
@@ -3968,7 +3966,7 @@ object SimilarityOps {
   /** Sampled-exact ground truth: exact top-`k` `(node, nbr)` pairs for
     * the 1-in-[[RecallSampleMod]] node sample of a normalized embedding
     * frame — ONE estimator shared by [[knnRecallAudit]] and
-    * `BandScaleProbe` (r17 review: two hand-rolled copies would let the
+    * `ScaleProbe band` (r17 review: two hand-rolled copies would let the
     * probe's `require(recall ≥ 0.8)` validate a different estimator
     * than the shipped query — exactly the agreement-vs-recall
     * divergence this round exists to close). The independent pure-Scala

@@ -42,13 +42,7 @@ object SketchOps {
     * `cardinality_sketches`), deliberately paid.
     */
   def hllEstimate(s: SparkSession, dir: String): DataFrame = {
-    val hashed = Tables(s, dir, "lineitem")
-      // spread the one-partition single-file scan before the per-row
-      // md5/conv/bin/lpad string battery — it (and the partial of the
-      // (suppkey, bucket) aggregate) otherwise runs single-task (r19
-      // JobProbe: a 1.3 s n=1 stage; the DedupOps duplicateSpans lesson)
-      .repartition(s.sessionState.conf.numShufflePartitions,
-        col("l_suppkey"))
+    val hashed = Tables.spread(Tables(s, dir, "lineitem"), col("l_suppkey"))
       .select(col("l_suppkey"),
         conv(substring(md5(col("l_orderkey").cast("string").cast("binary")),
           1, 15), 16, 10).cast("long").as("h"))
@@ -143,10 +137,7 @@ object SketchOps {
         key.cast("string")).cast("binary")), 1, 15), 16, 10)
         .cast("long") % cmWidth
     val ev = Tables(s, dir, "events")
-    val sketch = ev
-      // spread before the depth-fold explode + per-row md5 (the
-      // hllEstimate note)
-      .repartition(s.sessionState.conf.numShufflePartitions, col("user_id"))
+    val sketch = Tables.spread(ev, col("user_id"))
       .select(col("user_id"), explode(rows).as("i"))
       .select(col("i"), bucketOf(col("user_id"), col("i")).as("bucket"))
       .groupBy(col("i"), col("bucket"))
@@ -204,11 +195,7 @@ object SketchOps {
     */
   def cmsJoinCard(s: SparkSession, dir: String): DataFrame = {
     def sketch(df: DataFrame, key: String): DataFrame =
-      df
-        // spread before the depth-fold explode + per-row md5 (the
-        // hllEstimate note — single-file scans arrive as one partition)
-        .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
-          col(key))
+      Tables.spread(df, col(key))
         .select(col(key), explode(array((0 until cmDepth).map(lit): _*)).as("i"))
         .select(col("i"),
           (conv(substring(md5(concat(col("i").cast("string"), lit(","),

@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 /** Test-table access for queries/oracles (TESTDATA.md). Reads are plain
@@ -33,6 +35,58 @@ object Tables {
       }
     } else {
       spark.read.parquet(s"$sfDir/$name.parquet")
+    }
+  }
+
+  /** `df` repartitioned by `key` into `spark.sql.shuffle.partitions`
+    * partitions when it arrives with fewer; otherwise `df` itself.
+    *
+    * Per-row work on text and vectors (regex batteries, tokenize, shingle
+    * and minhash projections, explodes before a map-side aggregate) runs
+    * one task per input partition. A small single-file parquet table scans
+    * as ONE partition, so without this that work runs on one core, once per
+    * consumer of the frame. Input that already arrives spread (a multi-file
+    * table, whose scan splits follow its files, or a frame behind an
+    * exchange) is left alone: re-shuffling it would move the whole text
+    * column and add no parallelism.
+    *
+    * The count is read from `df`'s physical plan ([[plannedPartitions]]),
+    * never by running a job. Where the plan does not tell it, `df` is
+    * spread. An exchange's count is the one it plans before AQE coalesces
+    * it. AQE packs a shuffle's partitions toward total/(default
+    * parallelism) bytes each, but no smaller than its minimum partition
+    * size (16 KB as [[graft.GraftOptimizations]] installs it), so it folds
+    * such a frame onto fewer tasks than the shuffle partitions only when
+    * the whole shuffle is about that many minimum partitions or smaller
+    * (some 64 KB at 4 cores): too little per-row work to pay for one more
+    * exchange.
+    */
+  def spread(df: DataFrame, key: Column): DataFrame = {
+    val target = df.sparkSession.sessionState.conf.numShufflePartitions
+    if (plannedPartitions(df).exists(_ >= target)) df
+    else df.repartition(target, key)
+  }
+
+  /** The partition count `df` would run with, read from its physical plan
+    * without running a job: an exchange or a partitioned operator reports
+    * its own count (under AQE, its count before coalescing), a file scan
+    * the splits it packs its files into; narrow operators keep their
+    * child's count. None where the plan does not say (a union, a join over
+    * unknown sides, an in-memory relation).
+    */
+  private[graft] def plannedPartitions(df: DataFrame): Option[Int] =
+    partitionsOf(df.queryExecution.executedPlan)
+
+  private def partitionsOf(p: SparkPlan): Option[Int] = p match {
+    // before execution, the initial plan with its exchanges
+    case a: AdaptiveSparkPlanExec => partitionsOf(a.executedPlan)
+    case s: FileSourceScanExec => Some(s.inputRDD.getNumPartitions)
+    case _ => p.outputPartitioning.numPartitions match {
+      case 0 => p.children match {
+        case Seq(child) => partitionsOf(child)
+        case _ => None
+      }
+      case n => Some(n)
     }
   }
 }

@@ -61,12 +61,7 @@ object TextOps {
     * digit ratios, and a low-quality flag (the usual pretraining filters).
     */
   def textQuality(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "documents")
-      // spread the one-partition single-file scan before the per-doc
-      // regex battery (5 regexp_counts/doc) — it otherwise runs
-      // single-task, and composites (data_card) pay it serially per leg
-      // (r19 JobProbe; the DedupOps duplicateSpans lesson)
-      .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
+    Tables.spread(Tables(s, dir, "documents"), col("doc_id"))
       .select(col("doc_id"), normText(col("text")).as("t"))
       .select(
         col("doc_id"),
@@ -135,11 +130,7 @@ object TextOps {
     // empty docs deterministic and engine-identical (r15 ADVICE)
     val denom = nullif(regexp_count(col("t"), lit("\\S+")), lit(0))
       .cast("double")
-    val measured = Tables(s, dir, "documents")
-      // spread before the ~20 regex evaluations per doc (8 stopword
-      // rlikes + 4 regexp_counts + replace) — single-task otherwise;
-      // filter_agreement's rule leg rides this (r19 JobProbe)
-      .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
+    val measured = Tables.spread(Tables(s, dir, "documents"), col("doc_id"))
       .select(col("doc_id"), normText(col("text")).as("t"))
       .select(
         col("doc_id"),
@@ -207,11 +198,7 @@ object TextOps {
     * aggregate totals for corpus budgeting.
     */
   def tokenCount(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "documents")
-      // spread before the two regex token counts per doc (single-file
-      // scan = one partition; data_card/domain_reweight/dedup_keep_best
-      // all re-run this leg — r19 JobProbe)
-      .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
+    Tables.spread(Tables(s, dir, "documents"), col("doc_id"))
       .select(col("doc_id"), col("source"), normText(col("text")).as("t"))
       .select(col("doc_id"), col("source"),
         regexp_count(col("t"), lit("\\S+")).as("ws_tokens"),
@@ -326,12 +313,7 @@ object TextOps {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column => bc, expression => be}
     import graft.functions.expressions.RollingShingleHash
     def grams(k: Int) = bc(RollingShingleHash(be(col("htoks")), k))
-    val base = Tables(s, dir, "documents")
-      // spread before tokenize + the interpreted xxhash64 transform +
-      // rolling shingle hashes; base feeds TWO subtrees (ratios + the
-      // top-token explode), both single-task on the raw scan (r19
-      // JobProbe; the duplicateSpans lesson)
-      .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
+    val base = Tables.spread(Tables(s, dir, "documents"), col("doc_id"))
       .select(col("doc_id"), col("source"),
         split(normText(col("text")), " ").as("toks"))
       .withColumn("htoks", graft.functions.ArrayFunctions.xxhash64Elements(col("toks")))
@@ -496,11 +478,7 @@ object TextOps {
     * shuffle narrow.
     */
   def contaminationCheck(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(s, dir, "documents")
-      // spread before tokenize + the (interpreted) per-shingle transform:
-      // both eval and train branches re-ran it on the one-partition scan
-      // (the duplicateSpans lesson, r19)
-      .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
+    val docs = Tables.spread(Tables(s, dir, "documents"), col("doc_id"))
       .select(col("doc_id"), col("source"),
         split(normText(col("text")), " ").as("toks"))
     containmentScores(
@@ -644,11 +622,7 @@ object TextOps {
     * is touched exactly once, by this one keyed shuffle).
     */
   private[graft] def bpeWordFreq(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "documents")
-      // spread the one-partition scan before tokenize/explode — the
-      // map-side partial of the word-frequency aggregate otherwise runs
-      // single-task, once per BPE query (the duplicateSpans lesson, r19)
-      .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
+    Tables.spread(Tables(s, dir, "documents"), col("doc_id"))
       .select(explode(split(normText(col("text")), " ")).as("w"))
       .filter(length(col("w")) >= 2)
       .groupBy("w").agg(count(lit(1)).as("f"))
@@ -1028,10 +1002,7 @@ object TextOps {
     */
   def charEntropy(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column => bc, expression => be}
-    Tables(s, dir, "documents")
-      // spread before the per-char entropy pass (single-file scan = one
-      // partition; the duplicateSpans lesson)
-      .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
+    Tables.spread(Tables(s, dir, "documents"), col("doc_id"))
       .select(col("doc_id"), normText(col("text")).as("t"))
       .select(col("doc_id"), length(col("t")).as("n_chars"),
         round(bc(graft.functions.expressions.CharEntropy(be(col("t")))), 4)
@@ -1123,12 +1094,9 @@ object TextOps {
     * collected driver-side.
     */
   def bigramLmScore(s: SparkSession, dir: String): DataFrame = {
-    val toks = Tables(s, dir, "documents")
-      // spread before the posexplode: toks feeds four subtrees (bigrams,
-      // bigram counts, unigram counts, vocab), each re-tokenizing the
-      // one-partition scan single-task; doc_id matches the lead window's
-      // partition key (r19 JobProbe; the domainReweight note)
-      .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
+    // doc_id is the lead window's partition key, so the window rides
+    // this exchange
+    val toks = Tables.spread(Tables(s, dir, "documents"), col("doc_id"))
       .select(col("doc_id"),
         posexplode(split(normText(col("text")), " ")).as(Seq("pos", "w")))
     val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))

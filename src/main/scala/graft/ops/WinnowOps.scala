@@ -62,14 +62,9 @@ object WinnowOps {
     val toks = split(DedupOps.normText(col("text")), " ")
     def shingleAt(t: Column, i: Column): Column =
       md5(concat_ws(" ", slice(t, i, lit(K))).cast("binary"))
-    Tables(s, dir, "documents")
-      // spread the one-partition single-file scan before the per-shingle
-      // md5 transform (one digest + string alloc per position) — it ran
-      // single-task, serially per consumer (r19 JobProbe: a 0.7 s n=1
-      // stage; the DedupOps duplicateSpans lesson). doc_id matches the
-      // winnowing window's partition key, so the window rides this
-      // exchange.
-      .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
+    // doc_id is the winnowing window's partition key, so the window
+    // rides this exchange
+    Tables.spread(Tables(s, dir, "documents"), col("doc_id"))
       .select(col("doc_id"), toks.as("toks"))
       .withColumn("n_sh_i", greatest(size(col("toks")) - (K - 1), lit(0)))
       .select(col("doc_id"), col("n_sh_i").cast("long").as("n_sh"),

@@ -540,7 +540,7 @@ object StreamingHnsw extends MaintainerFacade(new BandedTopKMaintainer(
     * [[StreamingKnn.forExpectedCorpus]] symmetry, needed one octave
     * later: the fixed 8×10 build config is occupancy-tuned for the gate
     * corpora (≤ 2000 vectors → ≤ 8/bucket) but quadratic all the same
-    * (r17 DrainScaleProbe: ×16.5 at the sf0.1→sf1 step — candidate mass
+    * (r17 `ScaleProbe drain`: ×16.5 at the sf0.1→sf1 step — candidate mass
     * ∝ n²/256). The occupancy rule runs with HNSW's OWN gate target
     * ([[HnswIndex.OccTarget]] ≈ 8/bucket — the load 8×10 was tuned at,
     * an octave finer than the knn lists' 160) and floors at the shipped

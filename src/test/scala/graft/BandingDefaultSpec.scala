@@ -12,7 +12,7 @@ import graft.ops.SimilarityOps
   * three ways — (a) the pure rule: gate corpora derive the pinned gate
   * config (the oracle-parity invariant every knn-family oracle SQL
   * rides), the 20k-vector probe corpus derives the bits=7 config
-  * `BandScaleProbe` measured 11× faster at sf1; (b) the planner table's
+  * `ScaleProbe band` measured 11× faster at sf1; (b) the planner table's
   * own recommendation, clamped identically, equals what the default
   * ships; (c) recall vs EXACT ≥ 0.8 at a scaled derived config on a
   * clustered synthetic corpus large enough to leave the clamp floor —
@@ -32,7 +32,7 @@ class BandingDefaultSpec extends AnyFunSuite {
     assert(bitsFor(500) == KnnBitsPerBand)
     assert(bitsFor(2000) == KnnBitsPerBand)
     // the sf1 probe corpus (20k vectors): exactly the config the r16
-    // BandScaleProbe measured linear (180.9 -> 16.3 s)
+    // ScaleProbe band measured linear (180.9 -> 16.3 s)
     assert(bitsFor(20000) == 7)
     // rule shape: ceil(log2(n/target)) above the floor
     assert(bitsFor(161 * 16) == 5)    // just past 4-bit capacity

@@ -1,7 +1,6 @@
 package graft
 
 import scala.util.Random
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{ClusterOps, DedupOps}
@@ -312,37 +311,7 @@ class ClusterOpsSpec extends AnyFunSuite {
       ClusterOps.contractPartition(pairs.iterator, 1))
   }
 
-  /** Spark jobs `body` runs, counted by a listener on a job-local property
-    * (the tagging perfbench's tracer uses), so jobs of other threads do
-    * not count. A marker job run after `body` is seen by the listener only
-    * once every earlier job start was: the bus delivers in order.
-    */
-  private def jobsRunBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.jobs"
-    val seen = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
-          .foreach(tag => seen.merge(tag, 1, (a, b) => a + b))
-    }
-    val prev = sc.getLocalProperty(key)
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, "body")
-      body
-      sc.setLocalProperty(key, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.containsKey("marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.containsKey("marker"), "listener bus never delivered")
-      seen.getOrDefault("body", 0)
-    } finally {
-      sc.setLocalProperty(key, prev)
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def jobsRunBy(body: => Unit): Int = SparkWork.of(spark)(body).jobs
 
   test("job budget: connectedComponents' construction on a chain plus cliques") {
     // a 200-node chain (diameter 199) and five 12-node cliques, over four
@@ -355,9 +324,14 @@ class ClusterOpsSpec extends AnyFunSuite {
     }
     val edges = (chain ++ cliques).toDF("a", "b").repartition(4)
     var labels: DataFrame = null
-    val jobs = jobsRunBy { labels = ClusterOps.connectedComponents(edges) }
+    val work = SparkWork.of(spark) { labels = ClusterOps.connectedComponents(edges) }
     val budget = 11
-    assert(jobs <= budget, s"$jobs construction jobs (budget $budget)")
+    assert(work.jobs <= budget, s"${work.jobs} construction jobs (budget $budget)")
+    // stages too: compress round 1 reuses the hook aggregation's exchange
+    // on this non-nullable edge list, so no map stage runs twice
+    val stageBudget = 11
+    assert(work.stages <= stageBudget,
+      s"${work.stages} construction stages (budget $stageBudget)")
     assert(labels.count() == 260)
   }
 }
