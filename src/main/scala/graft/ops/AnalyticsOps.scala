@@ -694,8 +694,8 @@ object AnalyticsOps {
   def sparseCosinePairs(s: SparkSession, dir: String): DataFrame = {
     val dfCap = 50
     // tf feeds df/total/weights subtrees; the SparseIndex seam serves the
-    // materialized table when seeded, the localCheckpointed inline build
-    // otherwise (r13 — shared inverted-index base with bm25_search)
+    // materialized table (r13 — shared inverted-index base with
+    // bm25_search)
     val tf = SparseIndex.shingleTf(s, dir)
     val dfT = tf.groupBy(col("s")).agg(count(lit(1)).as("df"))
     val nDocs = tf.agg(countDistinct(col("doc_id")).as("n_docs"))
@@ -786,9 +786,8 @@ object AnalyticsOps {
   def bm25Search(s: SparkSession, dir: String): DataFrame = {
     val dfCap = 50; val k1 = 1.2; val b = 0.75
     // tf feeds SIX subtrees (df, stats, corpus, qsel, qterms, scoring);
-    // the SparseIndex seam serves the materialized table when seeded and
-    // the localCheckpointed inline build otherwise (r13 — the shared
-    // inverted-index base with sparse_cosine_pairs)
+    // the SparseIndex seam serves the materialized table (r13 — the
+    // shared inverted-index base with sparse_cosine_pairs)
     val tf = SparseIndex.shingleTf(s, dir)
     val dfT = tf.groupBy(col("s")).agg(count(lit(1)).as("df"))
     val stats = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
@@ -886,7 +885,7 @@ object AnalyticsOps {
     * landing in existing postings).
     *
     * Scale shape: both eras are narrow filters of the ONE audited
-    * [[SparseIndex.shingleTf]] table (seam-served when seeded); each
+    * [[SparseIndex.shingleTf]] table (seam-served); each
     * era's stats is one term-keyed map-side-combined aggregate; the merge
     * is a term-keyed full-outer join of two term-sized frames; the digest
     * is a single map-side-combined global aggregate. The corpus is never
@@ -1390,7 +1389,7 @@ object AnalyticsOps {
     // (GraphEdges — the distinct shuffles half the pair volume, measured
     // 1.75× over the naive ≠-join when introduced in r7; the bench session
     // builds the list once for the whole graph family)
-    val canonical = GraphEdges.canonicalCheckpointed(s, dir)
+    val canonical = GraphEdges.canonical(s, dir)
       .select(col("u").as("src"), col("v").as("dst"))
     val edges = canonical.unionAll(
       canonical.select(col("dst").as("src"), col("src").as("dst")))
@@ -1478,7 +1477,7 @@ object AnalyticsOps {
     */
   def pprIterate(s: SparkSession, dir: String, rounds: Int): DataFrame = {
     val li = Tables(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-    val canonical = GraphEdges.canonicalCheckpointed(s, dir)
+    val canonical = GraphEdges.canonical(s, dir)
       .select(col("u").as("src"), col("v").as("dst"))
     val edges = canonical.unionAll(
       canonical.select(col("dst").as("src"), col("src").as("dst")))
@@ -1743,10 +1742,9 @@ object AnalyticsOps {
     */
   def brandAffinity(s: SparkSession, dir: String): DataFrame = {
     // the distinct (order, brand) basket table comes from the GraphEdges
-    // seam (materialized once per session when seeded; inline otherwise —
-    // VERDICT r9 #3): the lineitem⋈part scan + distinct is shared work,
-    // only the brand-level pair join and the three aggregates stay
-    // query-local
+    // seam (materialized once per session — VERDICT r9 #3): the
+    // lineitem⋈part scan + distinct is shared work, only the brand-level
+    // pair join and the three aggregates stay query-local
     val baskets = GraphEdges.brandBaskets(s, dir)
     val nOrders = Tables(s, dir, "orders")
       .agg(count(lit(1)).cast("double").as("n"))

@@ -284,7 +284,7 @@ object ClusterOps {
   /** Shared output contract: (doc_id, cluster_rep, keep) over an edge
     * frame, `keep` iff the doc IS its component's min-id representative.
     */
-  private[ops] def clustersOver(edges: DataFrame): DataFrame =
+  private[graft] def clustersOver(edges: DataFrame): DataFrame =
     connectedComponents(edges)
       .select(col("id").as("doc_id"), col("rep").as("cluster_rep"),
         (col("id") === col("rep")).as("keep"))
@@ -299,9 +299,7 @@ object ClusterOps {
     */
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
     // the pair list comes from the DedupEdges seam (materialized once per
-    // session when seeded — the production near-dup pair table analog;
-    // inline build otherwise, so Verify still exercises the full edge
-    // build — VERDICT r9 precedent, r10 extension)
+    // session — the production near-dup pair table analog)
     clustersOver(DedupEdges.pairs(s, dir).select("doc_a", "doc_b"))
 
   /** The composition a 100 TB corpus actually runs: clusters over the
@@ -319,7 +317,7 @@ object ClusterOps {
     */
   def dedupClustersLsh(s: SparkSession, dir: String): DataFrame =
     // same seam as dedupClusters: the shingle-LSH edge table is the one a
-    // production pipeline materializes per snapshot (inline when unseeded)
+    // production pipeline materializes per snapshot
     clustersOver(DedupEdges.shinglePairs(s, dir).select("doc_a", "doc_b"))
 
   /** [[dedupClustersOracle]]'s recursive closure over the
@@ -570,7 +568,7 @@ object ClusterOps {
     * the star list is node-sized; the maintained closure input is
     * star ∪ delta — at 100 TB that's |clustered docs| + |delta pairs|
     * edges instead of the full pair table, and the pair table itself
-    * comes from the session seam when seeded.
+    * comes from the session seam.
     */
   def incrementalLabels(s: SparkSession, dir: String): DataFrame = {
     val isDelta = (c: org.apache.spark.sql.Column) =>

@@ -12,14 +12,12 @@ import org.apache.spark.sql.functions.col
   * materializes the verified pair table ONCE per corpus snapshot (it IS
   * the dedup audit artifact reviewers sign off on) and clustering /
   * curation read it; the session analog is a one-time parquet
-  * materialization, seeded OUTSIDE query construction (builders stay
-  * pure), temp storage reclaimed by [[clear]] / the JVM shutdown hook.
+  * materialization, written by the first read for a dir ([[SessionSeam]])
+  * or up front by [[seed]], temp storage reclaimed by [[clear]] / the JVM
+  * shutdown hook.
   *
   * `dedup_ngram_jaccard` itself ALWAYS builds inline — the edge build is
-  * that query's own claim — and unseeded sessions (Verify, tests, library
-  * callers) build inline everywhere, so the correctness gate pins both
-  * paths' semantics (DedupEdgesSpec: seeded ≡ unseeded row identity for
-  * the pair table and both consumers).
+  * that query's own claim.
   */
 object DedupEdges {
 
@@ -40,56 +38,47 @@ object DedupEdges {
   /** Materialize both pair lists + the CC label table for `dir` once per
     * session (idempotent, orphan-reclaiming — [[SessionSeam]]).
     */
-  def seed(s: SparkSession, dir: String): Unit =
-    seam.seed(dir) { root =>
-      build(s, dir).write.mode("overwrite").parquet(s"$root/pairs")
+  def seed(s: SparkSession, dir: String): Unit = root(s, dir)
+
+  private def root(s: SparkSession, dir: String): String =
+    seam.seed(dir) { out =>
+      build(s, dir).write.mode("overwrite").parquet(s"$out/pairs")
       buildShingle(s, dir).write.mode("overwrite")
-        .parquet(s"$root/shingle_pairs")
+        .parquet(s"$out/shingle_pairs")
       // the CC label table is the second derived artifact the session
       // materializes (r13 — five curation/lineage queries re-ran the
-      // Borůvka closure per execution): derive it from the parquet
-      // just written, NOT via pairs() — the seam registers `dir` only
-      // after this lambda returns, so pairs() here would rebuild the
-      // whole edge list inline
+      // Borůvka closure per execution): derive it from the parquet just
+      // written, NOT via pairs() — `dir` is registered only after this
+      // body returns, and a read from inside it would re-enter the seam's
+      // computeIfAbsent for the same dir, which throws
       ClusterOps.clustersOver(
-          s.read.parquet(s"$root/pairs").select(col("doc_a"), col("doc_b")))
-        .write.mode("overwrite").parquet(s"$root/labels")
+          s.read.parquet(s"$out/pairs").select(col("doc_a"), col("doc_b")))
+        .write.mode("overwrite").parquet(s"$out/labels")
     }
 
   /** Drop all seeded materializations and delete their parquet. */
   def clear(): Unit = seam.clear()
 
-  /** (doc_a, doc_b, jaccard) pairs: the materialized table when seeded,
-    * else the inline build.
-    */
+  /** (doc_a, doc_b, jaccard) pairs, read from the materialized table. */
   def pairs(s: SparkSession, dir: String): DataFrame =
-    seam.lookup(dir) match {
-      case None => build(s, dir)
-      case Some(root) => s.read.parquet(s"$root/pairs")
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    }
+    Tables.parquet(s, s"${root(s, dir)}/pairs")
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
 
-  /** (doc_a, doc_b, jaccard) shingle-LSH pairs: materialized when seeded,
-    * else the inline build.
+  /** (doc_a, doc_b, jaccard) shingle-LSH pairs, read from the
+    * materialized table.
     */
   def shinglePairs(s: SparkSession, dir: String): DataFrame =
-    seam.lookup(dir) match {
-      case None => buildShingle(s, dir)
-      case Some(root) => s.read.parquet(s"$root/shingle_pairs")
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    }
+    Tables.parquet(s, s"${root(s, dir)}/shingle_pairs")
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
 
-  /** (doc_id, cluster_rep, keep) CC labels over [[pairs]]: materialized
-    * when seeded, else the inline [[ClusterOps.dedupClusters]] closure.
+  /** (doc_id, cluster_rep, keep) CC labels over [[pairs]], read from the
+    * materialized table — the [[ClusterOps.dedupClusters]] closure's rows.
     * `dedup_clusters` itself (and the delete/keep-policy queries that
     * argue about the closure) always run the CC inline — the closure is
     * their claim; this serves the five curation/lineage consumers that
     * only need the labels.
     */
   def clusterLabels(s: SparkSession, dir: String): DataFrame =
-    seam.lookup(dir) match {
-      case None => ClusterOps.dedupClusters(s, dir)
-      case Some(root) => s.read.parquet(s"$root/labels")
-        .select(col("doc_id"), col("cluster_rep"), col("keep"))
-    }
+    Tables.parquet(s, s"${root(s, dir)}/labels")
+      .select(col("doc_id"), col("cluster_rep"), col("keep"))
 }

@@ -16,11 +16,8 @@ import org.apache.spark.sql.functions._
   * self-contained — ~15–25 s of repeated identical work per bench session.
   * At 100 TB a production deployment materializes these ONCE as tables
   * every consumer scans (see SCALE.md); the session analog is a one-time
-  * parquet materialization, seeded OUTSIDE query construction so builders
-  * stay pure (the [[IncrementalDedup.seedQueryStore]] discipline —
-  * construction never writes). Unseeded sessions (Verify, tests, library
-  * users) get the inline build — same values, so the correctness gate pins
-  * both paths' semantics.
+  * parquet materialization, written by the first read for a dir
+  * ([[SessionSeam]]) or up front by [[seed]].
   *
   * Parquet, not a cached/checkpointed frame, deliberately: Bench clears the
   * cache manager and unpersists leftover checkpoint blocks between reps
@@ -64,11 +61,13 @@ object GraphEdges {
   /** Materialize the seam tables for `dir` once per session (idempotent,
     * orphan-reclaiming — [[SessionSeam]]).
     */
-  def seed(s: SparkSession, dir: String): Unit =
-    seam.seed(dir) { root =>
-      build(s, dir).write.mode("overwrite").parquet(s"$root/edges")
+  def seed(s: SparkSession, dir: String): Unit = root(s, dir)
+
+  private def root(s: SparkSession, dir: String): String =
+    seam.seed(dir) { out =>
+      build(s, dir).write.mode("overwrite").parquet(s"$out/edges")
       buildBrandBaskets(s, dir).write.mode("overwrite")
-        .parquet(s"$root/baskets")
+        .parquet(s"$out/baskets")
     }
 
   /** Drop all seeded materializations and delete their parquet from disk
@@ -76,45 +75,18 @@ object GraphEdges {
     */
   def clear(): Unit = seam.clear()
 
-  /** Canonical (u, v) edges: the materialized table when seeded, else the
-    * inline build. Callers that iterate should use
-    * [[canonicalCheckpointed]] instead of re-checkpointing a parquet scan.
+  /** Canonical (u, v) edges, read from the materialized table: a stable,
+    * re-readable frame, so iterative consumers never recompute the pair
+    * join.
     */
   def canonical(s: SparkSession, dir: String): DataFrame =
     canonicalWeighted(s, dir).select(col("u"), col("v"))
 
   /** Canonical (u, v, cnt) edges with the co-occurrence count column. */
   def canonicalWeighted(s: SparkSession, dir: String): DataFrame =
-    seam.lookup(dir) match {
-      case None => build(s, dir)
-      case Some(root) => s.read.parquet(s"$root/edges")
-    }
+    Tables.parquet(s, s"${root(s, dir)}/edges")
 
-  /** [[canonical]] with the iterative-consumer contract: a stable,
-    * re-readable frame whose per-round reads never recompute the pair
-    * join. Seeded → the parquet scan IS that (no copy through the block
-    * manager); unseeded → one localCheckpoint.
-    */
-  def canonicalCheckpointed(s: SparkSession, dir: String): DataFrame =
-    seam.lookup(dir) match {
-      case None => build(s, dir).select(col("u"), col("v")).localCheckpoint()
-      case Some(root) => s.read.parquet(s"$root/edges")
-        .select(col("u"), col("v"))
-    }
-
-  /** [[canonicalWeighted]] under the iterative-consumer contract. */
-  def canonicalWeightedCheckpointed(s: SparkSession, dir: String): DataFrame =
-    seam.lookup(dir) match {
-      case None => build(s, dir).localCheckpoint()
-      case Some(root) => s.read.parquet(s"$root/edges")
-    }
-
-  /** Distinct (okey, p_brand) baskets: materialized when seeded, else the
-    * inline build.
-    */
+  /** Distinct (okey, p_brand) baskets, read from the materialized table. */
   def brandBaskets(s: SparkSession, dir: String): DataFrame =
-    seam.lookup(dir) match {
-      case None => buildBrandBaskets(s, dir)
-      case Some(root) => s.read.parquet(s"$root/baskets")
-    }
+    Tables.parquet(s, s"${root(s, dir)}/baskets")
 }

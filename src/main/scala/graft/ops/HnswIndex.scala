@@ -13,15 +13,13 @@ import org.apache.spark.sql.functions.col
   * queries against it — exactly what [[SimilarityOps.hnswAdjacencyInline]]'s
   * scaladoc promises ("production keeps it as a maintained table") and
   * this seam delivers for the session: one parquet materialization at the
-  * SHIPPED build config, seeded outside query construction, temp storage
-  * reclaimed by [[clear]] / the JVM shutdown hook.
+  * SHIPPED build config, written by the first read for a dir
+  * ([[SessionSeam]]) or up front by [[seed]], temp storage reclaimed by
+  * [[clear]] / the JVM shutdown hook.
   *
   * Experimental configs (HnswProbe's parameter sweeps, the narrow-beam
   * recall spec) pass non-default build parameters and always build
-  * inline. Unseeded sessions (Verify, tests, library callers) build
-  * inline everywhere, so the correctness gate pins both paths
-  * (HnswIndexSpec: seeded ≡ unseeded row identity for the adjacency and
-  * both consumers).
+  * inline.
   */
 object HnswIndex {
 
@@ -168,21 +166,19 @@ object HnswIndex {
   /** Materialize the adjacency for `dir` once per session (idempotent,
     * orphan-reclaiming — [[SessionSeam]]).
     */
-  def seed(s: SparkSession, dir: String): Unit =
-    seam.seed(dir)(root =>
-      build(s, dir).write.mode("overwrite").parquet(s"$root/nbrs"))
+  def seed(s: SparkSession, dir: String): Unit = root(s, dir)
+
+  private def root(s: SparkSession, dir: String): String =
+    seam.seed(dir)(out =>
+      build(s, dir).write.mode("overwrite").parquet(s"$out/nbrs"))
 
   /** Drop all seeded materializations and delete their parquet. */
   def clear(): Unit = seam.clear()
 
-  /** `(node, nbr)` symmetrized layer-0 adjacency at the shipped config:
-    * the materialized table when seeded, else the inline build (long ids
-    * — parquet round-trip exact).
+  /** `(node, nbr)` symmetrized layer-0 adjacency at the shipped config,
+    * read from the materialized table (long ids — parquet round-trip
+    * exact).
     */
   def adjacency(s: SparkSession, dir: String): DataFrame =
-    seam.lookup(dir) match {
-      case None => build(s, dir)
-      case Some(root) => s.read.parquet(s"$root/nbrs")
-        .select(col("node"), col("nbr"))
-    }
+    Tables.parquet(s, s"${root(s, dir)}/nbrs").select(col("node"), col("nbr"))
 }

@@ -19,13 +19,12 @@ import org.apache.spark.sql.functions.col
   * cost stays visible in the bench through them).
   *
   * One parquet materialization at the shipped config (4×20 banding,
-  * top-K), seeded outside query construction (GraftSession.seedSeams:
-  * Bench, ExplainAudit, JobProbe, ScaleProbe), temp
-  * storage reclaimed by [[clear]] / the JVM shutdown hook. Unseeded
-  * sessions (Verify, tests, library callers) build inline, so the
-  * correctness gate pins both paths (KnnListsSpec: seeded ≡ unseeded row
-  * identity for the lists and both consumers). Longs and the 4-rounded
-  * cosine round-trip parquet exactly.
+  * top-K), written by the first read for a dir ([[SessionSeam]]) or up
+  * front by [[seed]] (GraftSession.seedSeams: Bench, ExplainAudit,
+  * JobProbe, ScaleProbe), temp storage reclaimed by [[clear]] / the JVM
+  * shutdown hook. Longs and the 4-rounded cosine round-trip parquet
+  * exactly, so the served lists equal [[build]] row for row
+  * (SessionSeamSpec).
   */
 object KnnLists {
 
@@ -36,24 +35,22 @@ object KnnLists {
     SimilarityOps.knnJoin(s, dir)
 
   /** Materialize the lists for `dir` once per session (idempotent). */
-  def seed(s: SparkSession, dir: String): Unit =
-    seam.seed(dir)(root =>
-      build(s, dir).write.mode("overwrite").parquet(s"$root/lists"))
+  def seed(s: SparkSession, dir: String): Unit = root(s, dir)
+
+  private def root(s: SparkSession, dir: String): String =
+    seam.seed(dir)(out =>
+      build(s, dir).write.mode("overwrite").parquet(s"$out/lists"))
 
   /** Drop all seeded materializations and delete their parquet. */
   def clear(): Unit = seam.clear()
 
-  /** `(vec_id, rank, neighbor_id, cos)` lists at the shipped config: the
-    * materialized table when seeded, else the inline build. The orderBy
-    * is re-applied on the read path — the artifact's row order is not a
-    * parquet property, and every consumer's contract is deterministic
-    * output.
+  /** `(vec_id, rank, neighbor_id, cos)` lists at the shipped config, read
+    * from the materialized table. The orderBy is re-applied on the read
+    * path — the artifact's row order is not a parquet property, and every
+    * consumer's contract is deterministic output.
     */
   def lists(s: SparkSession, dir: String): DataFrame =
-    seam.lookup(dir) match {
-      case None => build(s, dir)
-      case Some(root) => s.read.parquet(s"$root/lists")
-        .select(col("vec_id"), col("rank"), col("neighbor_id"), col("cos"))
-        .orderBy("vec_id", "rank")
-    }
+    Tables.parquet(s, s"${root(s, dir)}/lists")
+      .select(col("vec_id"), col("rank"), col("neighbor_id"), col("cos"))
+      .orderBy("vec_id", "rank")
 }

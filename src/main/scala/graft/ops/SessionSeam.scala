@@ -11,21 +11,30 @@ package graft.ops
   * writes whatever artifact set the seam owns (one parquet dir or
   * several) — holders keep their build definitions and serving methods;
   * the seam owns only the lifecycle.
+  *
+  * Every read goes through [[seed]]: the first read for a dir writes the
+  * artifacts, every later one scans them, so a session that never calls
+  * the holder's explicit `seed` serves the same plan as one that does
+  * (Bench seeds up front only to time the builds apart from the queries).
+  * A seed body must not read its own holder: that would re-enter
+  * `computeIfAbsent` on the same map, which throws.
   */
-private[ops] final class SessionSeam(tmpPrefix: String) {
+private[graft] final class SessionSeam(tmpPrefix: String) {
 
   private val seeded =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   sys.addShutdownHook(clear())
 
-  /** Materialize for `dir` once (idempotent): `write` receives the fresh
-    * temp root and persists the seam's artifacts under it. A failed
-    * write deletes its temp dir before rethrowing — otherwise no map
-    * entry is recorded and neither [[clear]] nor the shutdown hook would
-    * ever reclaim the orphan (ADVICE r10).
+  /** The materialization root for `dir`, written on first use: `write`
+    * receives a fresh temp root and persists the seam's artifacts under
+    * it. Concurrent first calls for one dir write once (the others wait).
+    * A failed write deletes its temp dir before rethrowing — otherwise no
+    * map entry is recorded and neither [[clear]] nor the shutdown hook
+    * would ever reclaim the orphan (ADVICE r10) — and the next call
+    * writes again.
     */
-  def seed(dir: String)(write: String => Unit): Unit =
+  def seed(dir: String)(write: String => Unit): String =
     seeded.computeIfAbsent(dir, { _ =>
       val out = java.nio.file.Files.createTempDirectory(tmpPrefix)
       try write(out.toString)
@@ -35,9 +44,6 @@ private[ops] final class SessionSeam(tmpPrefix: String) {
       }
       out.toString
     })
-
-  /** The materialization root for `dir`, if seeded. */
-  def lookup(dir: String): Option[String] = Option(seeded.get(dir))
 
   private def deleteRecursively(root: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(root)) {

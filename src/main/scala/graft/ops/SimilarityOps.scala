@@ -431,10 +431,9 @@ object SimilarityOps {
     * partitioned verify → per-node TopK, both stages keyed and bounded.
     * Nodes with no bucket cohabitant anywhere emit no rows (correct for
     * LSH-kNN: they have no near neighbor at the banding's similarity
-    * floor). Seeded sessions serve the
-    * [[KnnLists]] materialization of this build (r15 — the production
-    * artifact-serving shape); the inline build stays the unseeded path
-    * and its honest cost stays bench-visible through
+    * floor). The `knn_join` query serves the [[KnnLists]]
+    * materialization of this build (r15 — the production
+    * artifact-serving shape); its honest cost stays bench-visible through
     * [[incrementalKnn]] / [[knnDeleteRepair]], which rebuild by design.
     */
   def knnJoin(s: SparkSession, dir: String): DataFrame = {
@@ -726,9 +725,9 @@ object SimilarityOps {
     * once (a < b) with its cosine and shared-neighbor count.
     *
     * Scale shape: the FIRST pure artifact consumer — every input is the
-    * n×K [[KnnLists]] table (seeded sessions never touch the corpus or
-    * banding at all): mutuality is one id-keyed semi-join of the lists
-    * against their reversal, the SNN count one keyed join-join-aggregate
+    * n×K [[KnnLists]] table (it never touches the corpus or banding):
+    * mutuality is one id-keyed semi-join of the lists against their
+    * reversal, the SNN count one keyed join-join-aggregate
     * over K-bounded lists. At 100 TB this runs entirely on the
     * materialized kNN artifact — the production shape for every
     * lists-derived graph analytic.
@@ -736,13 +735,8 @@ object SimilarityOps {
   def knnMutual(s: SparkSession, dir: String): DataFrame = {
     val lists = KnnLists.lists(s, dir)
       .select(col("vec_id").as("node"), col("neighbor_id").as("nbr"),
-        col("cos"))
-      .localCheckpoint() // 4 consumers (mutual semi ×2, SNN join ×2):
-                         // seeded it's a wash (sf0.1 warm 0.51 with /
-                         // 0.45 without — 4 reads of a tiny artifact)
-                         // but UNSEEDED the 4 consumers would each
-                         // re-run the full lists build — the skew_stats
-                         // local-wash-isn't-scale-safe lesson
+        col("cos")) // 4 consumers (mutual semi ×2, SNN join ×2), each
+                    // a scan of the small artifact
     val rev = lists.select(col("nbr").as("node"), col("node").as("nbr"))
     val mut = lists.filter(col("node") < col("nbr"))
       .join(rev, Seq("node", "nbr"), "left_semi")
@@ -1011,7 +1005,7 @@ object SimilarityOps {
     */
   def semdedupKnn(s: SparkSession, dir: String): DataFrame =
     ClusterOps.clustersOver(
-        KnnLists.lists(s, dir) // the materialized artifact when seeded
+        KnnLists.lists(s, dir) // the materialized artifact
           .filter(col("cos") >= SemDedupCos)
           .select(col("vec_id").as("doc_a"), col("neighbor_id").as("doc_b")))
       .select(col("doc_id").as("vec_id"), col("cluster_rep"), col("keep"))
@@ -3951,7 +3945,7 @@ object SimilarityOps {
     * top-[[K]] is computed by brute force (sample × corpus — bounded by
     * the sample, the [[annCosineTopk]] shape) and compared against the
     * shipped lists artifact ([[KnnLists.lists]] — the derived-config
-    * build, seam-served when seeded). One row: sample size, truth pair
+    * build, seam-served). One row: sample size, truth pair
     * count, hits, recall as exact integer ppm. This is the value the
     * derived default holds ≥ 0.8 at scale (SCALE.md r17 table); at the
     * gate corpus the banding sits at tuned occupancy and recall is high.

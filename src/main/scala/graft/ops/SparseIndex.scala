@@ -7,21 +7,16 @@ import org.apache.spark.sql.functions._
   * frequency table (r13 — VERDICT r12 #4, the [[DedupEdges]] pattern
   * applied to sparse retrieval): `bm25_search` and `sparse_cosine_pairs`
   * each rebuilt the IDENTICAL `(doc_id, s, tf)` inverted-index base per
-  * execution (corpus scan + shingle explode + keyed aggregate,
-  * localCheckpointed per run to amortize its 5-6 same-plan consumers).
-  * At 100 TB a production search stack materializes the inverted index
-  * ONCE per corpus snapshot and every ranking query reads it; the
-  * session analog is a one-time parquet materialization, seeded OUTSIDE
-  * query construction (builders stay pure), temp storage reclaimed by
-  * [[clear]] / the JVM shutdown hook.
+  * execution (corpus scan + shingle explode + keyed aggregate, read 5-6
+  * times per query). At 100 TB a production search stack materializes
+  * the inverted index ONCE per corpus snapshot and every ranking query
+  * reads it; the session analog is a one-time parquet materialization,
+  * written by the first read for a dir ([[SessionSeam]]) or up front by
+  * [[seed]], temp storage reclaimed by [[clear]] / the JVM shutdown hook.
   *
   * `rrf_fusion`'s sparse arm is word-level tf (shingle lists are
   * near-singleton on this corpus — its scaladoc) — a different table
   * with ONE consumer, so it stays inline by design.
-  *
-  * Unseeded sessions (Verify, tests, library callers) build inline, so
-  * the correctness gate pins both paths' semantics (SparseIndexSpec:
-  * seeded ≡ unseeded row identity for the tf table and both consumers).
   */
 object SparseIndex {
 
@@ -35,11 +30,10 @@ object SparseIndex {
 
   /** The inline `(doc_id, s, tf)` build: one corpus scan, the shingle
     * generator hashed once per row (map-side combined — the WinnowOps
-    * lesson), localCheckpointed because its consumers walk it 5-6× per
-    * query execution.
+    * lesson).
     */
   def build(s: SparkSession, dir: String): DataFrame =
-    buildFor(Tables(s, dir, "documents")).localCheckpoint()
+    buildFor(Tables(s, dir, "documents"))
 
   /** The same postings build over ANY `(doc_id, text)` frame — per-doc
     * rows are a pure function of the doc, which is what makes the
@@ -62,22 +56,21 @@ object SparseIndex {
   /** Materialize the tf table for `dir` once per session (idempotent,
     * orphan-reclaiming — [[SessionSeam]]).
     */
-  def seed(s: SparkSession, dir: String): Unit =
-    seam.seed(dir)(root =>
-      build(s, dir).write.mode("overwrite").parquet(s"$root/tf"))
+  def seed(s: SparkSession, dir: String): Unit = root(s, dir)
+
+  private def root(s: SparkSession, dir: String): String =
+    seam.seed(dir)(out =>
+      build(s, dir).write.mode("overwrite").parquet(s"$out/tf"))
 
   /** Drop all seeded materializations and delete their parquet. */
   def clear(): Unit = seam.clear()
 
-  /** `(doc_id, s, tf)`: the materialized table when seeded, else the
-    * inline build (integer counts — parquet round-trip exact).
+  /** `(doc_id, s, tf)` read from the materialized table (integer counts —
+    * parquet round-trip exact).
     */
   def shingleTf(s: SparkSession, dir: String): DataFrame =
-    seam.lookup(dir) match {
-      case None => build(s, dir)
-      case Some(root) => s.read.parquet(s"$root/tf")
-        .select(col("doc_id"), col("s"), col("tf"))
-    }
+    Tables.parquet(s, s"${root(s, dir)}/tf")
+      .select(col("doc_id"), col("s"), col("tf"))
 
   /** Persist a postings frame (`doc_id, s, tf`) as a parquet artifact —
     * the save half of the save/load/insert maintenance surface (r14 —

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Test-table access for queries/oracles (TESTDATA.md). Reads are plain
   * parquet scans so Catalyst pushes filters/projections into the scan.
@@ -21,7 +22,7 @@ object Tables {
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$sfDir/$name.parquet")
+      val df = parquet(spark, s"$sfDir/$name.parquet")
       df.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           // integral `div`, NOT `/`: epoch-nanos exceed 2^53, so double
@@ -34,9 +35,23 @@ object Tables {
         case _ => df
       }
     } else {
-      spark.read.parquet(s"$sfDir/$name.parquet")
+      parquet(spark, s"$sfDir/$name.parquet")
     }
   }
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** A parquet scan of `path` with its schema read once per path and
+    * passed to every later read. Inferring it is a one-task Spark job,
+    * which a plain `spark.read.parquet` runs again on every read (one job
+    * per table per query execution). The fixture tables and the session
+    * seams' artifacts are written once and never change under their path,
+    * so the first read's schema holds for every later one.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemas.computeIfAbsent(path,
+      p => spark.read.parquet(p).schema)).parquet(path)
 
   /** `df` repartitioned by `key` into `spark.sql.shuffle.partitions`
     * partitions when it arrives with fewer; otherwise `df` itself.

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerStageCompleted}
+  SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.DataFrame
 
 import scala.collection.mutable
@@ -16,14 +16,17 @@ import scala.collection.mutable
   *     warm purely from interpreted-expression JIT warm-up);
   *   - every job and the slowest stages of the last warm rep, with wall
   *     time, task time, shuffle read/write bytes and rows, so the
-  *     expensive stage is named instead of guessed. The eager
+  *     expensive stage is named instead of guessed: each stage is labelled
+  *     by the SQL operators its RDDs run ([[stageLabel]]), not by its call
+  *     site, which under AQE is the same CompletableFuture frame for
+  *     almost every stage. The eager
   *     localCheckpoints many operators mint at plan construction show up
   *     as their own jobs here — exactly the cost the final action's plan
   *     hides;
   *   - `COUNT <query> <n>`: the shuffle exchanges ([[exchangeCount]]) of
-  *     the seeded query's physical plan (AQE initial plan), read once in
-  *     the last rep. It is the SEEDED plan, so it need not equal a
-  *     PlanLintSpec budget, which is measured on unseeded plans.
+  *     the query's physical plan (AQE initial plan), read once in the
+  *     last rep — the served plan PlanLintSpec budgets, at this dir's
+  *     scale rather than the spec's sf0.001.
   *
   *   SPARK_GRAFT_CPUS=32 sbt 'runMain graft.tools.JobProbe /root/testdata/sf0.1 knn_delete_repair'
   */
@@ -39,6 +42,16 @@ object JobProbe {
     ("(?<![A-Za-z])Exchange " +
       "(hashpartitioning|SinglePartition|RoundRobinPartitioning|" +
       "rangepartitioning)").r.findAllIn(plan).size
+
+  /** The SQL operators a stage runs, in RDD order (e.g. `Scan parquet >
+    * WholeStageCodegen (2) > Exchange`): the operation scopes Spark tags
+    * each operator's RDDs with. A stage with no scoped RDD keeps its name.
+    */
+  def stageLabel(si: StageInfo): String = {
+    val ops = si.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name.trim))
+      .distinct
+    if (ops.isEmpty) si.name else ops.mkString(" > ")
+  }
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -74,7 +87,7 @@ object JobProbe {
         val jid = stageToJob.synchronized {
           stageToJob.getOrElse(si.stageId, -1) }
         stages.synchronized {
-          stages += StageRec(jid, si.stageId, si.name,
+          stages += StageRec(jid, si.stageId, stageLabel(si),
             (si.completionTime.getOrElse(0L) -
               si.submissionTime.getOrElse(0L)) / 1e3,
             m.executorRunTime / 1e3,
@@ -125,7 +138,7 @@ object JobProbe {
       println("  -- slowest stages --")
       stages.toSeq.sortBy(-_.wall).take(14).foreach { st =>
         println(f"  stage ${st.stageId}%4d job ${st.jobId}%3d wall ${st.wall}%6.2f task ${st.taskSec}%7.2f n ${st.nTasks}%3d " +
-          f"inRows ${st.inRows}%9d shR ${st.shRead / 1024}%8d KiB shW ${st.shWrite / 1024}%8d KiB  ${st.name.take(60)}")
+          f"inRows ${st.inRows}%9d shR ${st.shRead / 1024}%8d KiB shW ${st.shWrite / 1024}%8d KiB  ${st.name.take(100)}")
       }
       println(s"COUNT $n $exchanges")
     }

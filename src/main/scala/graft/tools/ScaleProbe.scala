@@ -28,7 +28,7 @@ object ScaleProbe {
 
   /** Heaviest committed floors that read only documents/embeddings
     * (the graph family and its graph_edges seam need lineitem, which the
-    * derived dir lacks, so that seam is left unseeded).
+    * derived dir lacks, so `queries` does not seed that seam).
     */
   val DefaultNames = Seq(
     "knn_delete_repair", "incremental_knn", "knn_damage_stats",

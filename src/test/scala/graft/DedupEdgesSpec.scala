@@ -2,100 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The DedupEdges materialization seam's contract (the GraphOpsSpec seam
-  * test applied to the text-dedup family): seeded and unseeded paths are
-  * row-identical for the pair table AND both consumers, seeding is
-  * idempotent, and clear() reclaims the temp parquet from disk.
+/** The near-dup pair table's maintenance algebra: the delta build's pairs
+  * and the base era's partition the full rebuild. The DedupEdges seam's
+  * lifecycle is SessionSeamSpec's.
   */
 class DedupEdgesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
-
-  test("seeded and unseeded paths are row-identical; seed idempotent; clear reclaims disk") {
-    import graft.ops.DedupEdges
-    DedupEdges.clear()
-    try {
-      val unseeded = DedupEdges.pairs(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val shingleUnseeded = DedupEdges.shinglePairs(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val cl0 = graft.ops.ClusterOps.dedupClusters(spark, dir).collect()
-        .map(_.toSeq)
-      val cll0 = graft.ops.ClusterOps.dedupClustersLsh(spark, dir).collect()
-        .map(_.toSeq)
-      val cu0 = graft.ops.CurationOps.corpusCuration(spark, dir).collect()
-        .map(_.toSeq)
-      val ag0 = graft.ops.DedupOps.dedupAgreement(spark, dir).collect()
-        .map(_.toSeq)
-      val fu0 = graft.ops.CurationOps.curationFunnel(spark, dir).collect()
-        .map(_.toSeq)
-      val sd0 = graft.ops.CurationOps.softDedup(spark, dir).collect()
-        .map(_.toSeq)
-      val fa0 = graft.ops.CurationOps.filterAgreement(spark, dir).collect()
-        .map(_.toSeq)
-      def tmpDirs(): Set[java.nio.file.Path] = {
-        val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-        val it = java.nio.file.Files.list(root).iterator()
-        var acc = Set.empty[java.nio.file.Path]
-        while (it.hasNext) {
-          val p = it.next()
-          if (p.getFileName.toString.startsWith("graft_neardup_")) acc += p
-        }
-        acc
-      }
-      val preSeed = tmpDirs()
-      DedupEdges.seed(spark, dir)
-      DedupEdges.seed(spark, dir) // idempotent — no second materialization
-      val seeded = DedupEdges.pairs(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(seeded == unseeded, "materialized pair list diverges from inline build")
-      assert(seeded.nonEmpty, "no near-dup pairs — seam test vacuous")
-      val shingleSeeded = DedupEdges.shinglePairs(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(shingleSeeded == shingleUnseeded,
-        "materialized shingle pair list diverges from inline build")
-      // r13: the CC label artifact rides the same seam — materialized
-      // labels must equal the inline Borůvka closure row for row
-      val labelsSeeded = DedupEdges.clusterLabels(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      val labelsInline = graft.ops.ClusterOps.dedupClusters(spark, dir)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      assert(labelsSeeded == labelsInline,
-        "materialized cluster labels diverge from the inline closure")
-      assert(labelsSeeded.nonEmpty, "no cluster labels — seam test vacuous")
-      val cl1 = graft.ops.ClusterOps.dedupClusters(spark, dir).collect()
-        .map(_.toSeq)
-      assert(cl0.toSeq == cl1.toSeq, "dedup_clusters differs seeded vs unseeded")
-      val cll1 = graft.ops.ClusterOps.dedupClustersLsh(spark, dir).collect()
-        .map(_.toSeq)
-      assert(cll0.toSeq == cll1.toSeq, "dedup_clusters_lsh differs seeded vs unseeded")
-      val cu1 = graft.ops.CurationOps.corpusCuration(spark, dir).collect()
-        .map(_.toSeq)
-      assert(cu0.toSeq == cu1.toSeq, "corpus_curation differs seeded vs unseeded")
-      val ag1 = graft.ops.DedupOps.dedupAgreement(spark, dir).collect()
-        .map(_.toSeq)
-      assert(ag0.toSeq == ag1.toSeq, "dedup_agreement differs seeded vs unseeded")
-      val fu1 = graft.ops.CurationOps.curationFunnel(spark, dir).collect()
-        .map(_.toSeq)
-      assert(fu0.toSeq == fu1.toSeq, "curation_funnel differs seeded vs unseeded")
-      // r15 s3: the two selection-wave consumers of the label artifact
-      val sd1 = graft.ops.CurationOps.softDedup(spark, dir).collect()
-        .map(_.toSeq)
-      assert(sd0.toSeq == sd1.toSeq, "soft_dedup differs seeded vs unseeded")
-      val fa1 = graft.ops.CurationOps.filterAgreement(spark, dir).collect()
-        .map(_.toSeq)
-      assert(fa0.toSeq == fa1.toSeq,
-        "filter_agreement differs seeded vs unseeded")
-      val created = tmpDirs() -- preSeed
-      assert(created.nonEmpty, "seed created no temp materialization dir")
-      DedupEdges.clear()
-      created.foreach { p =>
-        assert(!java.nio.file.Files.exists(p),
-          s"clear() left materialization on disk: $p")
-      }
-    } finally DedupEdges.clear()
-  }
 
   test("incremental maintenance: base pairs ⊎ delta-endpoint pairs ≡ full rebuild, and the delta build emits no base×base pair") {
     import org.apache.spark.sql.functions._

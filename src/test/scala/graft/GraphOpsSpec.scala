@@ -173,60 +173,6 @@ class GraphOpsSpec extends AnyFunSuite {
     } finally e.unpersist()
   }
 
-  test("GraphEdges seam: seeded and unseeded paths are row-identical; seed is idempotent") {
-    import graft.ops.GraphEdges
-    GraphEdges.clear()
-    try {
-      val unseeded = GraphEdges.canonicalWeighted(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val basketsU = GraphEdges.brandBaskets(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet
-      val pr0 = graft.ops.AnalyticsOps.pagerankStep(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getDouble(1)))
-      val ss0 = graft.ops.GraphOps.sssp2Step(spark, dir).collect().map(_.toSeq)
-      val ba0 = graft.ops.AnalyticsOps.brandAffinity(spark, dir).collect()
-        .map(_.toSeq)
-      def tmpDirs(): Set[java.nio.file.Path] = {
-        val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-        val it = java.nio.file.Files.list(root).iterator()
-        var acc = Set.empty[java.nio.file.Path]
-        while (it.hasNext) {
-          val p = it.next()
-          if (p.getFileName.toString.startsWith("graft_copurchase_")) acc += p
-        }
-        acc
-      }
-      val preSeed = tmpDirs()
-      GraphEdges.seed(spark, dir)
-      GraphEdges.seed(spark, dir) // idempotent — no second materialization
-      val seeded = GraphEdges.canonicalWeighted(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val basketsS = GraphEdges.brandBaskets(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet
-      assert(seeded == unseeded, "materialized edge list diverges from inline build")
-      assert(basketsS == basketsU, "materialized baskets diverge from inline build")
-      // a consumer query must return the SAME rows either way (the property
-      // that makes seeding a bench-only optimization, not a semantics knob)
-      val pr1 = graft.ops.AnalyticsOps.pagerankStep(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getDouble(1)))
-      assert(pr0.sameElements(pr1), "pagerank_step differs seeded vs unseeded")
-      val ss1 = graft.ops.GraphOps.sssp2Step(spark, dir).collect().map(_.toSeq)
-      assert(ss0.toSeq == ss1.toSeq, "sssp_2step differs seeded vs unseeded")
-      val ba1 = graft.ops.AnalyticsOps.brandAffinity(spark, dir).collect()
-        .map(_.toSeq)
-      assert(ba0.toSeq == ba1.toSeq, "brand_affinity differs seeded vs unseeded")
-      // seeded materializations live under temp dirs that clear() must
-      // reclaim from disk (ADVICE r9): exactly the dirs THIS seed created
-      // (the tmp root may hold strays from other JVMs — not ours to judge)
-      val created = tmpDirs() -- preSeed
-      assert(created.nonEmpty, "seed created no temp materialization dir")
-      GraphEdges.clear()
-      created.foreach { p =>
-        assert(!java.nio.file.Files.exists(p),
-          s"clear() left materialization on disk: $p")
-      }
-    } finally GraphEdges.clear()
-  }
   test("degree_assortativity: Pearson bounds hold and a driver-side " +
     "recount matches") {
     val dir = "/root/testdata/sf0.001"

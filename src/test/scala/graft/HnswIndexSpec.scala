@@ -2,60 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The HnswIndex materialization seam's contract (the SparseIndexSpec
-  * test applied to graph ANN): seeded and unseeded paths are
-  * row-identical (as multisets — the adjacency legitimately carries both
-  * orientations of a mutual pair) for the adjacency AND both consumers
-  * (ann_hnsw_topk, mmr_rerank_ann), seeding is idempotent, and clear()
-  * reclaims the temp parquet from disk.
+/** The maintenance algebra of the HNSW out-adjacency and the kNN lists:
+  * save/load round trips, insert and delete-repair ≡ rebuild. The
+  * HnswIndex seam's lifecycle is SessionSeamSpec's.
   */
 class HnswIndexSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
-
-  test("seeded and unseeded paths are row-identical; seed idempotent; clear reclaims disk") {
-    import graft.ops.HnswIndex
-    HnswIndex.clear()
-    try {
-      def bag(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
-        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      val unseeded = bag(HnswIndex.adjacency(spark, dir))
-      val hn0 = graft.ops.SimilarityOps.annHnswTopk(spark, dir).collect()
-        .map(_.toSeq)
-      val mm0 = graft.ops.SimilarityOps.mmrRerankAnn(spark, dir).collect()
-        .map(_.toSeq)
-      def tmpDirs(): Set[java.nio.file.Path] = {
-        val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-        val it = java.nio.file.Files.list(root).iterator()
-        var acc = Set.empty[java.nio.file.Path]
-        while (it.hasNext) {
-          val p = it.next()
-          if (p.getFileName.toString.startsWith("graft_hnsw_")) acc += p
-        }
-        acc
-      }
-      val preSeed = tmpDirs()
-      HnswIndex.seed(spark, dir)
-      HnswIndex.seed(spark, dir) // idempotent — no second materialization
-      val seeded = bag(HnswIndex.adjacency(spark, dir))
-      assert(seeded == unseeded,
-        "materialized adjacency diverges from inline build")
-      assert(seeded.nonEmpty, "empty adjacency — seam test vacuous")
-      val hn1 = graft.ops.SimilarityOps.annHnswTopk(spark, dir).collect()
-        .map(_.toSeq)
-      assert(hn0.toSeq == hn1.toSeq, "ann_hnsw_topk differs seeded vs unseeded")
-      val mm1 = graft.ops.SimilarityOps.mmrRerankAnn(spark, dir).collect()
-        .map(_.toSeq)
-      assert(mm0.toSeq == mm1.toSeq, "mmr_rerank_ann differs seeded vs unseeded")
-      val created = tmpDirs() -- preSeed
-      assert(created.nonEmpty, "seed created no temp materialization dir")
-      HnswIndex.clear()
-      created.foreach { p =>
-        assert(!java.nio.file.Files.exists(p),
-          s"clear() left materialization on disk: $p")
-      }
-    } finally HnswIndex.clear()
-  }
 
   test("saveOut/loadOut round-trips the artifact; insert over a persisted base equals the full rebuild") {
     import graft.ops.{HnswIndex, SimilarityOps}

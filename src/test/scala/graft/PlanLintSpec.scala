@@ -216,6 +216,8 @@ class PlanLintSpec extends AnyFunSuite {
     // repartition(numShufflePartitions, doc_id) — keyed by the downstream
     // aggregate/window key, so it is the exchange the pipeline would need
     // anyway once the input is unsplittable.
+    // A session seam's consumer counts only the scans of the seam's
+    // parquet; the seam builds have their own budgets (next test).
     val budget = Map(
       "quantile_sketch" -> 2,     // per-source sketch agg (+sort)
       "events_islands" -> 2,      // ONE user_id shuffle feeds both window
@@ -234,9 +236,9 @@ class PlanLintSpec extends AnyFunSuite {
                                   // users-sized merge agg; sort reuses
       "table_diff" -> 4,          // full-outer hash exchange per side +
                                   // status rollup (+sort)
-      "link_prediction" -> 5,     // checkpointed edges/adjacency feed the
-                                  // hop join, candidate distinct, score
-                                  // attach, top-k window (+sort)
+      "link_prediction" -> 3,     // candidate distinct off the seam's edge
+                                  // parquet, top-k window (+sort); the
+                                  // adjacency rides its checkpoint
       "fk_discovery" -> 12,       // 4 candidate edges × (parent distinct,
                                   // contained count, child-key count);
                                   // child distincts materialize at
@@ -309,12 +311,13 @@ class PlanLintSpec extends AnyFunSuite {
                                   // EXISTS/NOT-EXISTS self-join plan);
                                   // top-20 is TakeOrdered, no sort
                                   // exchange
-      "triangle_count" -> 19,     // checkpointed edges/degrees feed a
-                                  // 4-branch DAG: two deg attaches, the
-                                  // adjacency build + two attaches, and
-                                  // three scalar stats aggregates — AQE
-                                  // broadcasts the small attaches at
-                                  // runtime, never adds exchanges
+      "triangle_count" -> 7,      // the seam's edge parquet and the
+                                  // checkpointed degrees feed a 4-branch
+                                  // DAG: two deg attaches, the adjacency
+                                  // build + two attaches, and three scalar
+                                  // stats aggregates — AQE broadcasts the
+                                  // small attaches at runtime, never adds
+                                  // exchanges
       "label_propagation_2step" -> 1, // rounds materialize via
                                   // localCheckpoint at construction; the
                                   // planned query is one community agg
@@ -326,9 +329,8 @@ class PlanLintSpec extends AnyFunSuite {
                                   // window, candidate repartition,
                                   // intersect-count agg (+sort reuses);
                                   // attach joins are AQE broadcasts
-      "ann_hnsw_topk" -> 2,       // the adjacency build runs eagerly
-                                  // behind its checkpoint (banded top-K
-                                  // kernel); the planned query is the
+      "ann_hnsw_topk" -> 2,       // the adjacency is the HnswIndex seam's
+                                  // parquet; the planned query is the
                                   // search: visited distinct + top-k
                                   // window (+sort reuses)
       "mmr_rerank" -> 2,          // ONE bounded-shortlist aggregate
@@ -356,11 +358,10 @@ class PlanLintSpec extends AnyFunSuite {
                                   // source-table window (SinglePartition
                                   // over ≤|sources| rows) + 1-row total
                                   // and level aggs (+sort)
-      "delete_propagation" -> 3,  // two CC label tables (propagation jobs
-                                  // ran at construction behind
-                                  // localCheckpoints; one level each, so
-                                  // no label-compose joins) + the audit
-                                  // join (+sort)
+      "delete_propagation" -> 1,  // the audit join's sort: both CC label
+                                  // tables propagate at construction behind
+                                  // localCheckpoints over the seam's pair
+                                  // parquet
       "model_calibration" -> 14,  // a chain of keyless 1-row aggregates
                                   // (GD steps, μ/σ, ECE) + the ≤10-row bin
                                   // agg — every exchange carries ≤32
@@ -379,10 +380,11 @@ class PlanLintSpec extends AnyFunSuite {
       "ann_truncated_recall" -> 7, // two per-query top-K windows + overlap
                                   // semi-join + per-query agg (+sort);
                                   // both rankings ride one broadcast pass
-      "quality_ablation" -> 6,    // the corpus_curation flag joins + ONE
+      "quality_ablation" -> 5,    // the corpus_curation flag joins + ONE
                                   // 15-column aggregate melted to 5 rows
                                   // (the five-way union form re-derived
-                                  // the pipeline per rule: 35 exchanges)
+                                  // the pipeline per rule: 35 exchanges);
+                                  // the labels are the seam's parquet
       "dedup_lsh_tune" -> 9,      // 3 configs × (band join + pair
                                   // distinct) off ONE signature pass +
                                   // per-config agg + union-truth distinct
@@ -403,11 +405,12 @@ class PlanLintSpec extends AnyFunSuite {
                                   // unigram/vocab aggs → checkpointed
                                   // per-doc loss) + token agg + the
                                   // |sources|-row weight algebra (+sort)
-      "data_card" -> 13,          // four doc-keyed flag joins + per-source
+      "data_card" -> 9,           // four doc-keyed flag joins + per-source
                                   // rollup + the bounded (source, lang)
                                   // count + argmax window + card join
-                                  // (+sort) — a release-time audit, not a
-                                  // serving path
+                                  // (+sort) over the seam's label parquet —
+                                  // a release-time audit, not a serving
+                                  // path
       "model_auc" -> 7,           // the GD/score chain's 1-row aggregates
                                   // + score-histogram agg + the bounded
                                   // cumsum window + final 1-row U agg —
@@ -425,14 +428,15 @@ class PlanLintSpec extends AnyFunSuite {
                                   // token_budget_fill shape
       "tokenizer_fertility" -> 3, // doc-keyed lang join + ONE per-lang agg
                                   // (+sort)
-      "dedup_cluster_stats" -> 9, // CC label table (propagation behind
-                                  // checkpoints) + per-cluster size agg +
+      "dedup_cluster_stats" -> 5, // CC label table (propagation behind
+                                  // checkpoints, over the seam's pair
+                                  // parquet) + per-cluster size agg +
                                   // histogram agg + 1-row corpus/clustered
                                   // counts (+sort)
-      "crossval_split" -> 11,      // fold map + ≤5-row volume agg; leak =
-                                  // two doc-keyed joins of the pair table
-                                  // + ≤5-row leak agg (+sort)
-      "dedup_threshold_sweep" -> 7, // ONE checkpointed pair-table read;
+      "crossval_split" -> 6,      // fold map + ≤5-row volume agg; leak =
+                                  // two doc-keyed joins of the seam's pair
+                                  // parquet + ≤5-row leak agg (+sort)
+      "dedup_threshold_sweep" -> 4, // scans of the seam's pair parquet;
                                   // explode fan-out + pair/degree rollups
                                   // are pair-table-sized (+sort)
       "wau_rolling" -> 7,         // (user, day) distinct + bounded x7
@@ -446,9 +450,9 @@ class PlanLintSpec extends AnyFunSuite {
       "conversion_lag" -> 3,      // the attribution window's user shuffle
                                   // + purchase-day attach + per-day agg
                                   // (+sort; small joins AQE-broadcast)
-      "degree_assortativity" -> 9, // edge build + degree agg + two
-                                  // node-keyed attaches + 1-row corr agg —
-                                  // no sort (1 row)
+      "degree_assortativity" -> 3, // degree agg over the seam's edge
+                                  // parquet + node-keyed attach + 1-row
+                                  // corr agg — no sort (1 row)
       "minhash_estimate_error" -> 5, // checkpointed signature table;
                                   // banded candidate join + distinct +
                                   // sig/shingle attaches + bucket agg
@@ -457,11 +461,12 @@ class PlanLintSpec extends AnyFunSuite {
                                   // histogram agg + bounded cumsum window
                                   // + 1-row q-hat and coverage aggs — no
                                   // sort (1 row)
-      "doc_lineage" -> 16,        // probe-set joins across the artifact
-                                  // frames (pair degree, CC labels,
-                                  // quality/repetition flag pipelines) —
-                                  // a governance audit, not a serving
-                                  // path; output is probe-set-sized
+      "doc_lineage" -> 5,         // probe-set joins across the artifact
+                                  // frames (pair degree and CC labels from
+                                  // the seam's parquet, quality/repetition
+                                  // flag pipelines) — a governance audit,
+                                  // not a serving path; output is
+                                  // probe-set-sized
       "model_eval_by_slice" -> 4, // two 1-row GD aggregates + ONE
                                   // per-source val aggregate (+sort)
       "dedup_keep_best" -> 3,     // CC label table (propagation behind
@@ -484,13 +489,9 @@ class PlanLintSpec extends AnyFunSuite {
                                   // candidate repartition, verify
                                   // intersect agg (+sort) — the inline
                                   // edge-build claim
-      "knn_join" -> 3,            // banding spread repartition (r18 —
-                                  // breaks the single-file scan's
-                                  // 1-partition ceiling; the banded
-                                  // top-K kernel's bucket exchange rides
-                                  // it behind the broadcast vector
-                                  // attach) + the kernel's node merge
-                                  // (the rank window reuses it) (+sort)
+      "knn_join" -> 1,            // the served lists' (vec_id, rank) sort;
+                                  // the banded top-K kernel is pinned as
+                                  // KnnLists.build in the seam build test
       "cardinality_sketches" -> 4, // HLL/percentile sketch agg + the
                                   // deliberate exact-distinct audit
                                   // baseline on its OWN two-phase agg
@@ -535,16 +536,14 @@ class PlanLintSpec extends AnyFunSuite {
       "incremental_sparse" -> 3,  // 2 era term-stat aggs off the seam tf
                                   // + the full-outer merge; 1-row digest,
                                   // no sort
-      "knn_mutual" -> 10,         // unseeded: the lists build (banded
-                                  // top-K kernel, checkpoint boundary) +
-                                  // the mutual semi-join + two SNN joins
-                                  // + pair agg + left attach (+sort);
-                                  // seeded sessions skip the build —
+      "knn_mutual" -> 3,          // the mutual semi-join + SNN joins + pair
+                                  // agg + left attach (+sort) over scans of
+                                  // the seam's lists parquet — an
                                   // artifact-only consumer
-      "snn_clusters" -> 1,        // lists + closure propagation ride
-                                  // checkpoints (knnMutual boundary +
-                                  // ClusterOps levels); planned tail is
-                                  // the label rollup (+sort)
+      "snn_clusters" -> 1,        // the closure propagation over the seam's
+                                  // lists parquet rides ClusterOps' level
+                                  // checkpoints; planned tail is the label
+                                  // rollup (+sort)
       "knn_damage_stats" -> 3,    // the lists build (banded top-K
                                   // kernel, checkpoint boundary) +
                                   // the node-distinct audit; the two
@@ -561,11 +560,10 @@ class PlanLintSpec extends AnyFunSuite {
                                   // banding, node merge) + keep anti-join
                                   // (+sort) — build AND repair run by
                                   // design
-      "semdedup_knn" -> 1,        // the knn artifact build (banded
-                                  // top-K kernel) and the CC closure
-                                  // both run at construction behind its
-                                  // checkpoints; the planned tail is the
-                                  // sort
+      "semdedup_knn" -> 1,        // the CC closure over the seam's lists
+                                  // parquet runs at construction behind
+                                  // its checkpoints; the planned tail is
+                                  // the sort
       "dsir_weights" -> 7,        // doc×bucket agg + B-row dist agg +
                                   // 1-row totals + per-doc score agg
                                   // (+sort); the bag agg plans per
@@ -582,18 +580,15 @@ class PlanLintSpec extends AnyFunSuite {
                                   // repartitions (r18; the kernel's
                                   // bucket exchange rides them) + top-1
                                   // node merge + eval left join (+sort)
-      "soft_dedup" -> 5,          // cluster-size agg + doc joins (+sort)
-                                  // over the label artifact's planned
-                                  // tail (unseeded; seam removes it)
+      "soft_dedup" -> 3,          // cluster-size agg + doc joins (+sort)
+                                  // over the seam's label parquet
       "cluster_quota_sample" -> 2, // ONE label-partitioned rank window
                                   // (+sort)
       "curriculum_phases" -> 12,   // cutpoint agg + phase agg + 1-row
                                   // total (+sort); partials pre-AQE
-      "filter_agreement" -> 23,   // gopher + dsir + perplexity chains +
-                                  // the label artifact's inline closure
-                                  // tail (unseeded plan-time bound; the
-                                  // seam serves labels from parquet in
-                                  // bench; r16 adds the ppl_tail leg)
+      "filter_agreement" -> 22,   // gopher + dsir + perplexity chains +
+                                  // the seam's label parquet (r16 adds the
+                                  // ppl_tail leg)
       "perplexity_filter" -> 14,  // doc-bag agg + bigram-model agg
                                   // (+ its unigram re-agg) + per-doc
                                   // score agg + 1-row cutpoint agg
@@ -618,11 +613,9 @@ class PlanLintSpec extends AnyFunSuite {
                                   // count is a separate action at
                                   // construction (the audited census
                                   // scalar pattern)
-      "knn_recall_audit" -> 7,    // banding spread repartition (r18) +
-                                  // the lists build (banded top-K
-                                  // kernel's node merge) + the
-                                  // sample-bounded exact window + hit
-                                  // semi-join + 1-row aggregates (truth
+      "knn_recall_audit" -> 3,    // banding-free: the sample-bounded exact
+                                  // window + hit semi-join over the seam's
+                                  // lists parquet + 1-row aggregates (truth
                                   // side rides its checkpoint)
       "hnsw_tombstone_recall" -> 8) // the seam-fed beam's per-round
                                   // frontier distincts + the filtered
@@ -646,6 +639,43 @@ class PlanLintSpec extends AnyFunSuite {
       // orderBy where one plans as a range exchange (orderBy+limit
       // compiles to TakeOrderedAndProject, which shuffles nothing).
       val maxEx = budget(name)
+      if (n > maxEx) Some(s"$name: $n exchanges (budget $maxEx)") else None
+    }
+    assert(offenders.isEmpty, offenders.mkString("; "))
+  }
+
+  test("session seam builds keep their shuffle-exchange budget") {
+    // every seam read serves the seam's parquet, so the query budgets
+    // above count none of the build work; each build is pinned here on its
+    // own, as the plan that runs once per session when the seam is written
+    import graft.ops.{DedupEdges, GraphEdges, HnswIndex, KnnLists,
+      SparseIndex}
+    GraftOptimizations.install(spark)
+    val budget = Seq(
+      "KnnLists.build" -> (KnnLists.build _, 3), // the fused kernel: the
+                                  // banding spread (its bucket exchange
+                                  // rides it) + the node merge (+sort)
+      "HnswIndex.build" -> (HnswIndex.build _, 0), // the adjacency runs
+                                  // behind hnswAdjacencyInline's checkpoint
+      "HnswIndex.buildOut" -> (HnswIndex.buildOut _, 2), // that
+                                  // checkpoint's kernel: banding spread +
+                                  // node merge
+      "SparseIndex.build" -> (SparseIndex.build _, 1), // the (doc_id, s)
+                                  // tf aggregate
+      "GraphEdges.build" -> (GraphEdges.build _, 1), // the (u, v) count
+                                  // agg; the order-keyed self-join plans
+                                  // as a broadcast at this scale
+      "GraphEdges.buildBrandBaskets" -> (GraphEdges.buildBrandBaskets _, 1),
+                                  // the basket distinct; the part attach
+                                  // broadcasts
+      "DedupEdges.build" -> (DedupEdges.build _, 6), // = the
+                                  // dedup_ngram_jaccard budget above
+      "DedupEdges.buildShingle" -> (DedupEdges.buildShingle _, 2))
+                                  // = the dedup_minhash_shingle budget
+    val offenders = budget.flatMap { case (name, (build, maxEx)) =>
+      val n = graft.tools.JobProbe.exchangeCount(
+        build(spark, dir).queryExecution.executedPlan.toString)
+      info(s"$name: $n exchanges (budget $maxEx)")
       if (n > maxEx) Some(s"$name: $n exchanges (budget $maxEx)") else None
     }
     assert(offenders.isEmpty, offenders.mkString("; "))

@@ -2,59 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The SparseIndex materialization seam's contract (the DedupEdgesSpec
-  * test applied to sparse retrieval): seeded and unseeded paths are
-  * row-identical for the shingle-tf table AND both consumers
-  * (bm25_search, sparse_cosine_pairs), seeding is idempotent, and
-  * clear() reclaims the temp parquet from disk.
+/** The shingle-tf postings' save/load/insert maintenance surface. The
+  * SparseIndex seam's lifecycle is SessionSeamSpec's.
   */
 class SparseIndexSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
-
-  test("seeded and unseeded paths are row-identical; seed idempotent; clear reclaims disk") {
-    import graft.ops.SparseIndex
-    SparseIndex.clear()
-    try {
-      val unseeded = SparseIndex.shingleTf(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      val bm0 = graft.ops.AnalyticsOps.bm25Search(spark, dir).collect()
-        .map(_.toSeq)
-      val sp0 = graft.ops.AnalyticsOps.sparseCosinePairs(spark, dir).collect()
-        .map(_.toSeq)
-      def tmpDirs(): Set[java.nio.file.Path] = {
-        val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-        val it = java.nio.file.Files.list(root).iterator()
-        var acc = Set.empty[java.nio.file.Path]
-        while (it.hasNext) {
-          val p = it.next()
-          if (p.getFileName.toString.startsWith("graft_sparsetf_")) acc += p
-        }
-        acc
-      }
-      val preSeed = tmpDirs()
-      SparseIndex.seed(spark, dir)
-      SparseIndex.seed(spark, dir) // idempotent — no second materialization
-      val seeded = SparseIndex.shingleTf(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      assert(seeded == unseeded, "materialized tf table diverges from inline build")
-      assert(seeded.nonEmpty, "empty shingle-tf table — seam test vacuous")
-      val bm1 = graft.ops.AnalyticsOps.bm25Search(spark, dir).collect()
-        .map(_.toSeq)
-      assert(bm0.toSeq == bm1.toSeq, "bm25_search differs seeded vs unseeded")
-      val sp1 = graft.ops.AnalyticsOps.sparseCosinePairs(spark, dir).collect()
-        .map(_.toSeq)
-      assert(sp0.toSeq == sp1.toSeq,
-        "sparse_cosine_pairs differs seeded vs unseeded")
-      val created = tmpDirs() -- preSeed
-      assert(created.nonEmpty, "seed created no temp materialization dir")
-      SparseIndex.clear()
-      created.foreach { p =>
-        assert(!java.nio.file.Files.exists(p),
-          s"clear() left materialization on disk: $p")
-      }
-    } finally SparseIndex.clear()
-  }
 
   test("save/load round-trips the postings; insert over a persisted base equals the full rebuild, stats included") {
     import graft.ops.SparseIndex
